@@ -1,232 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Benchmark main: runs every declared query against SPARK_GRAFT_SF_DIR and
-  * prints one JSON line of per-query wall seconds. Each query executes as a
-  * full action (count), so scan+shuffle+sink costs are all inside the
-  * measurement.
-  *
-  * Each query runs `SPARK_GRAFT_BENCH_ITERS` times (default 3) and the
-  * line reports the MEDIAN per query (plus the min, in `queries_min`):
-  * single-sample timings on a shared machine carry multi-second roving
-  * stalls that read as phantom 3-6× regressions — the median of three is
-  * stable against one stall, and the min bounds the query's true cost.
-  */
+/** Host telemetry for benchmark runs: cumulative /proc and cgroup counters,
+  * a memory-bandwidth gauge, and the deltas between two counter snapshots,
+  * so a slow window on a shared host can be told apart from a slow
+  * program. The benchmark harness under `perfbench/` records these beside
+  * every run. */
 object Bench {
-
-  /** Median per-line ratio of `cur` canary medians over the committed
-    * record's — the host-degradation signal (the canary queries are fixed
-    * and timed FIRST, so they compare across runs; the median is robust
-    * to one noisy line). None below 5 shared lines (too little evidence
-    * to block a record write). */
-  def canaryDegradation(recordCanary: Map[String, Double],
-                        cur: Map[String, Double]): Option[Double] = {
-    val shared = recordCanary.keySet.intersect(cur.keySet).toSeq
-    if (shared.size < 5) scala.None
-    else {
-      val ratios = shared
-        .map(k => cur(k) / math.max(recordCanary(k), 1e-9)).sorted
-      Some(ratios(ratios.size / 2))
-    }
-  }
-
-  /** Median ratio of this run's per-line MIN times over the committed
-    * record's, restricted to the record's top-`topN` heaviest shared
-    * lines. The 20-query canary is all LIGHT lines — a 1.07× canary
-    * median has been observed alongside 1.5-3× drift concentrated in the
-    * shuffle/JIT-heavy lines that dominate the total, so the heavy lines
-    * get their own comparison at the same threshold. Mins (not medians)
-    * are the cross-run comparable statistic here: a min is a lower bound
-    * on true cost, immune to a one-off stall in either run. None below
-    * 5 shared heavy lines (too little evidence to block). */
-  def heavyLineDegradation(recordMins: Map[String, Double],
-                           curMins: Map[String, Double],
-                           topN: Int = 10): Option[Double] = {
-    val heavy = recordMins.toSeq.sortBy(-_._2)
-      .filter { case (k, _) => curMins.contains(k) }.take(topN)
-    if (heavy.size < 5) scala.None
-    else {
-      val ratios =
-        heavy.map { case (k, v) => curMins(k) / math.max(v, 1e-9) }.sorted
-      Some(ratios(ratios.size / 2))
-    }
-  }
-
-  /** ANCHOR-SHIFT guard for record refreshes: the committed record is
-    * the baseline every future [[canaryDegradation]] comparison anchors
-    * on, so overwriting it with a run whose canary median sits anywhere
-    * outside `[1/tol, tol]` of the OUTGOING record's silently re-anchors
-    * the 1.4× degradation threshold — a 1.3× slow-host run passes the
-    * degradation guard today and then makes a further 1.3× slide
-    * invisible tomorrow (and an anomalously FAST canary re-anchors the
-    * other way, turning normal runs into false "degraded" blocks).
-    * Returns the median ratio when it falls outside the band; None means
-    * the refresh is anchor-compatible. Same thin-evidence rule as the
-    * other guards (None below 5 shared lines). A legitimate step change
-    * (host upgrade, canary-touching perf work) goes through
-    * SPARK_GRAFT_BENCH_FORCE=1, which is already the explicit
-    * re-anchoring act. */
-  def anchorShift(recordCanary: Map[String, Double],
-                  cur: Map[String, Double],
-                  tol: Double = 1.15): Option[Double] =
-    canaryDegradation(recordCanary, cur)
-      .filter(r => r > tol || r < 1.0 / tol)
-
-  /** Serving-quality floors gated on every full bench run: recall@10 of
-    * each line must hold its floor or the run FAILS (and the record
-    * guard's failed-route keeps it out of bench_last.json). The first
-    * three have been gated since r10/r16; the last three held
-    * 0.91/0.92/0.97 across rounds UNGATED — a serving regression there
-    * would still have committed a "clean" record. Floors sit ~0.05-0.07
-    * under the measured points: real regressions at these operating
-    * points collapse (0.9 → 0.2-0.5), they don't drift by 0.02. */
-  val RecallFloors: Seq[(String, Double)] = Seq(
-    "ann_ivf_pq" -> 0.2,
-    "ann_ivf_pq_rerank" -> 0.5,
-    "ann_ivf_pq_4bit_rerank" -> 0.5,
-    // the PERSISTED index serves from the same trained models as the
-    // in-memory points above, so the same operating-point floors apply:
-    // ADC from partition-pruned codes at the API default, and the RFlat
-    // rerank over disk candidates — a serving regression in the store
-    // round-trip (codes, models, prune) must fail the run like any other
-    "ann_ivf_pq_disk" -> 0.2,
-    "ann_ivf_pq_disk_rerank" -> 0.5,
-    "ann_pq_rerank" -> 0.85,
-    "ann_opq_rerank" -> 0.85,
-    "ann_quantized_topk" -> 0.90)
-
-  /** MID-TAIL regression guard for record refreshes: individual shared
-    * lines whose record min exceeds `minSec` and whose current min runs
-    * past `ratio`× the record's, worst first. The median-based guards
-    * above are deliberately blind to a handful of big movers (that
-    * robustness is their job against noise) — r17 refreshed a record
-    * whose canary median was 1.002 while seven band-candidate consumers
-    * ran 1.4-2.7×: a real algorithmic regression rode a clean-canary
-    * refresh silently. A deliberate algorithmic change routes through
-    * SPARK_GRAFT_BENCH_FORCE=1 — the explicit, visible accept. The
-    * `minSec` floor keeps sub-second lines (where JIT/scheduling noise
-    * alone reaches 2×) out of the signal. */
-  def midTailRegressions(recordMins: Map[String, Double],
-                         curMins: Map[String, Double],
-                         minSec: Double = 0.5,
-                         ratio: Double = 2.0): Seq[(String, Double)] =
-    recordMins.toSeq
-      .filter { case (k, v) => v > minSec && curMins.contains(k) }
-      .map { case (k, v) => k -> curMins(k) / math.max(v, 1e-9) }
-      .filter { case (_, r) => r > ratio }
-      .sortBy(-_._2)
-
-  /** SHARED-TOTAL guard for record refreshes: the summed medians over
-    * the lines BOTH runs share (new surface excluded) must stay within
-    * `tol`× of the record's, or the refresh routes aside. Exists because
-    * r18's run-2 profile slipped every per-family guard AT ONCE — a
-    * gradual in-run slowdown measured canary 1.05× (host still fast when
-    * the canary ran first), heavy lines ~1.39× (under the 1.4 gate) and
-    * no single line past the 2× mid-tail bar, yet the headline total —
-    * the number every cross-round comparison reads — was 1.39× the
-    * record's. Guarding the shared-line total directly closes the seam
-    * between the per-family thresholds; a legitimate step change is
-    * SPARK_GRAFT_BENCH_FORCE=1 as everywhere. Returns the ratio when it
-    * exceeds the band (either direction — an anomalously FAST total
-    * re-anchors comparisons just as silently); None under 5 shared
-    * lines. */
-  def sharedTotalShift(recordMeds: Map[String, Double],
-                       curMeds: Map[String, Double],
-                       tol: Double = 1.15): Option[Double] = {
-    val shared = recordMeds.keySet & curMeds.keySet
-    if (shared.size < 5) scala.None
-    else {
-      val rec = shared.toSeq.map(recordMeds).sum
-      val cur = shared.toSeq.map(curMeds).sum
-      val r = cur / math.max(rec, 1e-9)
-      if (r > tol || r < 1.0 / tol) Some(r) else scala.None
-    }
-  }
-
-  /** SF-SCALE gate statistic: the main-SF line's cost over its small-SF
-    * twin's, each taken as the MIN over that side's samples — the
-    * codebase's stated doctrine for cross-measurement comparison (see
-    * [[heavyLineDegradation]]: a min is a lower bound on true cost,
-    * immune to a one-off stall in either measurement). r18's official
-    * driver bench FAILED on exactly the median's blind spot: the two
-    * sides run minutes apart inside one process, so a contention spike
-    * on the large-scale line (cp_qc_train 7.3s vs its clean ~1.6s at
-    * loadavg 7.85) read as an 85× "superlinear growth" over a line whose
-    * honest ratio is 3.4. None when either side has no successful
-    * sample. */
-  def scaleGateRatio(mainSamples: Seq[Double],
-                     smallSamples: Seq[Double]): Option[Double] =
-    for {
-      m <- mainSamples.minOption
-      s <- smallSamples.minOption
-    } yield m / math.max(s, 1e-9)
-
-  /** The floor breaches in a recall block: (line, measured, floor). */
-  def recallFloorBreaches(recall: Map[String, Double])
-      : Seq[(String, Double, Double)] =
-    RecallFloors.flatMap { case (n, f) =>
-      recall.get(n).filter(_ < f).map(r => (n, r, f)) }
-
-  /** WALL-CLOCK BUDGET shed: iterations to use for the NEXT timed line
-    * given the run's elapsed seconds vs its budget. Past the budget the
-    * line runs ONE iteration instead of `iters` — the guards compare
-    * per-line MINS, and a single sample is still a valid min (an upper
-    * bound that only tightens with more samples), so shed lines stay
-    * comparable; what's lost is only the median's robustness to one
-    * stall. Exists because r19's driver window expired (rc=124) while
-    * ~195 lines × 3 iters were still running on a 1.4-2.3× degraded
-    * host, and the all-at-the-end JSON emission lost every number the
-    * run HAD measured. `budgetSec <= 0` disables shedding. */
-  def effectiveIters(iters: Int, elapsedSec: Double,
-                     budgetSec: Double): Int =
-    if (budgetSec > 0 && elapsedSec > budgetSec) 1 else iters
-
-  /** HEAD commit sha, resolved pure-JVM from `.git` (no exec): the bench
-    * record line carries it so every number in a committed record is
-    * traceable to the code-state that produced it. Empty string when the
-    * resolution fails (not a repo, detached workdir, etc.). */
-  def gitHead(repoDir: String = "."): String = try {
-    import java.nio.file.{Files, Paths}
-    // worktree/submodule checkouts have a GITLINK file ("gitdir: <path>")
-    // instead of a .git directory — follow the indirection so the record
-    // still carries its sha there
-    val dotGit = Paths.get(repoDir, ".git")
-    val gitDir =
-      if (Files.isDirectory(dotGit)) dotGit
-      else {
-        val link = new String(Files.readAllBytes(dotGit), "UTF-8").trim
-        val p = Paths.get(link.stripPrefix("gitdir:").trim)
-        if (p.isAbsolute) p else Paths.get(repoDir).resolve(p).normalize()
-      }
-    val head = new String(Files.readAllBytes(
-      gitDir.resolve("HEAD")), "UTF-8").trim
-    if (!head.startsWith("ref: ")) head
-    else {
-      val ref = head.stripPrefix("ref: ").trim
-      val loose = gitDir.resolve(ref)
-      // a worktree's refs live in its commondir (the main .git), not the
-      // per-worktree gitdir
-      val common = {
-        val c = gitDir.resolve("commondir")
-        if (Files.exists(c))
-          gitDir.resolve(new String(Files.readAllBytes(c), "UTF-8").trim)
-            .normalize()
-        else gitDir
-      }
-      val candidates = Seq(loose, common.resolve(ref))
-      candidates.find(Files.exists(_)) match {
-        case Some(f) => new String(Files.readAllBytes(f), "UTF-8").trim
-        case scala.None =>
-          val packed = common.resolve("packed-refs")
-          if (!Files.exists(packed)) ""
-          else new String(Files.readAllBytes(packed), "UTF-8")
-            .linesIterator.map(_.trim)
-            .find(l => !l.startsWith("#") && l.endsWith(" " + ref))
-            .map(_.split("\\s+")(0)).getOrElse("")
-      }
-    }
-  } catch { case _: Throwable => "" }
 
   /** Cumulative host resource counters from /proc and cgroup v2 — the
     * slow-host instrumentation: four r14/r18/r19 record attempts measured
@@ -293,18 +72,13 @@ object Bench {
   }
 
   /** One sample of the memory-bandwidth gauge (GB/s, a pre-touched 64 MB
-    * arraycopy) — the r20 slow-host root cause's direct detector, shared
-    * by [[hostCounters]] (run endpoints) and the PER-LINE sampling in the
-    * bench loop: the r20 driver window's post-1100s lines ran 30-137×
-    * while both ENDPOINT gauges read ~5.4 GB/s — a trough between the
-    * endpoints was invisible in the artifact that carried the inflated
-    * numbers, so heavy lines now carry their own gauge reading in the
-    * bench_line JSONL. ~13 ms on a healthy host; None only if the
-    * allocation itself fails. */
-  // gauge buffers allocated and page-touched ONCE: allocating + filling
-  // 128 MB immediately before each sampled heavy line put GC/allocation
-  // pressure inside the very measurement the gauge annotates (r21 ADVICE);
-  // reused buffers make a sample one arraycopy over warm pages
+    * arraycopy), also folded into [[hostCounters]]. A host whose memory
+    * bandwidth is capped by the hypervisor slows Spark 2-4× with no
+    * steal, iowait or throttling to show for it; this gauge is the one
+    * reading that drops with it. ~13 ms on a healthy host; None only if
+    * the allocation itself fails. */
+  // gauge buffers allocated and page-touched ONCE, so taking a sample puts
+  // no allocation or GC pressure on the run it annotates
   private lazy val membwSrc = {
     val a = new Array[Byte](64 << 20); java.util.Arrays.fill(a, 1.toByte); a
   }
@@ -349,1374 +123,5 @@ object Bench {
         "steal_frac" -> d.getOrElse("cpu_steal", 0.0) / tot,
         "iowait_frac" -> d.getOrElse("cpu_iowait", 0.0) / tot)
     d.view.filterKeys(k => !k.startsWith("cpu_")).toMap ++ frac ++ gauges
-  }
-
-  /** One per-query progress event (JSONL) — emitted to stdout AND
-    * bench_progress.jsonl the moment each line's measurement completes,
-    * so a killed/timed-out run still yields every completed number. */
-  private[graft] def benchLineEvent(name: String, median: Double,
-                                    min: Double, iters: Int,
-                                    elapsedSec: Double,
-                                    membw: Option[Double] = scala.None)
-      : String = {
-    // membw: the gauge sampled IMMEDIATELY BEFORE this line ran (heavy
-    // lines + every 10th line) — localizes a bandwidth trough in the same
-    // JSONL that carries the inflated timing (r20 finding #3)
-    val mb = membw.map(v => f""","membw":$v%.2f""").getOrElse("")
-    f"""{"metric":"bench_line","name":${jstr(name)},"median":$median%.3f,"min":$min%.3f,"iters":$iters,"elapsed_sec":$elapsedSec%.1f$mb}"""
-  }
-
-  /** Recover per-query (median, min) maps from a partial progress stream
-    * (the lines of bench_progress.jsonl, or a killed run's stdout) —
-    * non-`bench_line` and malformed lines are skipped, later events for
-    * the same name win (a re-timed line supersedes). */
-  private[graft] def parseProgress(lines: Iterator[String])
-      : Map[String, (Double, Double)] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val out = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    lines.foreach { ln =>
-      try {
-        val n = om.readTree(ln)
-        if (n.path("metric").asText() == "bench_line")
-          out(n.path("name").asText()) =
-            (n.path("median").asDouble(), n.path("min").asDouble())
-      } catch { case _: Throwable => () }
-    }
-    out.toMap
-  }
-
-  /** Contention triggers, NAMED (r21 VERDICT #8): a run is
-    * contention-suspect when a third java process is running (sbt + this
-    * fork are the expected two) or the 1-minute loadavg at start exceeds
-    * a quarter of the core count (floor 2.0). The old flat `loadavg > 2.0`
-    * tagged nearly any window on a 32-core box — the driver's clean
-    * 0-shed r21 run was tagged at loadavg 2.33, i.e. 7% busy — and the
-    * warning text always blamed java_procs even when loadavg was the
-    * trigger. Empty result = clean. */
-  private[graft] def contentionTriggers(javaProcs: Int, loadavg1m: Double,
-                                        cpus: Int): Seq[String] = {
-    val thresh = math.max(2.0, cpus * 0.25)
-    Seq(
-      if (javaProcs > 2)
-        Some(s"java_procs=$javaProcs (expected 2: sbt + this fork)")
-      else scala.None,
-      if (loadavg1m > thresh)
-        Some(f"loadavg_start=$loadavg1m%.2f > $thresh%.2f (cores/4)")
-      else scala.None
-    ).flatten
-  }
-
-  /** JSON string literal (quote + escape) — shared by the record line,
-    * the guard artifact and the incremental progress events. */
-  private[graft] def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    } + "\""
-
-  /** Temp dirs THIS JVM created through [[ownedTmpDir]] — the only set
-    * the default [[sweepTmpDirs]] touches. The harness `finally` blocks
-    * used to sweep PREFIX-WIDE, which deletes the live staging of any
-    * concurrently running bench/test JVM — the same contention scenario
-    * the loadavg/java_procs guard treats as possible. */
-  private val ownedTmp =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-
-  /** `Files.createTempDirectory` + registration for the end-of-harness
-    * sweep — every bench harness allocates its staging through this. */
-  private[graft] def ownedTmpDir(prefix: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    ownedTmp.add(p)
-    p
-  }
-
-  /** Best-effort removal of the temp-dirs this JVM created (via
-    * [[ownedTmpDir]]) whose names start with one of `prefixes` — called
-    * from harness `finally` blocks so a mid-harness throw can never
-    * strand corpus-sized staging under /tmp (the disk-pressure signature
-    * behind r15's cascading write-line failures). Only THIS JVM's dirs
-    * by default; `SPARK_GRAFT_SWEEP_ALL=1` opts into the prefix-wide
-    * sweep of the whole tmpdir for explicit crash cleanup (leftovers of
-    * a previously killed run), accepting that it would also hit another
-    * live JVM's staging. */
-  private[graft] def sweepTmpDirs(prefixes: String*): Unit = {
-    def rm(p: java.nio.file.Path): Unit =
-      try {
-        import java.nio.file.Files
-        import scala.jdk.CollectionConverters._
-        if (Files.exists(p)) {
-          val walk = Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(Files.delete)
-          finally walk.close()
-        }
-      } catch { case _: Throwable => () }
-    val it = ownedTmp.iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      if (prefixes.exists(p.getFileName.toString.startsWith)) {
-        rm(p); it.remove()
-      }
-    }
-    if (sys.env.get("SPARK_GRAFT_SWEEP_ALL").contains("1")) {
-      val tmpRoot = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"))
-      Option(tmpRoot.listFiles()).getOrElse(Array.empty)
-        .filter(d => prefixes.exists(d.getName.startsWith))
-        .foreach(d => rm(d.toPath))
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cpusInt = try cpus.trim.toInt catch { case _: Throwable => 32 }
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    // WALL-CLOCK BUDGET (seconds): past it, remaining lines shed to 1
-    // iteration ([[Bench.effectiveIters]]) so the full surface still
-    // completes inside the driver's window on a 2× degraded host — r19's
-    // window expired mid-run and the round's official artifact was empty.
-    // 0 disables. Default 900s: a clean full run takes ~10-12 min of
-    // wall-clock, so a clean run never sheds; a degraded one sheds its
-    // tail instead of timing out.
-    val budgetSec = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_BUDGET_SEC", "900").toDouble
-    val runStartNanos = System.nanoTime()
-    def elapsedSec: Double = (System.nanoTime() - runStartNanos) / 1e9
-    val gitSha = Bench.gitHead()
-    val hostStart = Bench.hostCounters()
-    // committed record read ONCE at start: queries_min drives the
-    // per-line membw sampling (heavy lines get a gauge reading), canary
-    // feeds the opt-in early-abort below. Best-effort — a missing or
-    // unparseable record just disables both.
-    val (recordMinsAtStart, recordCanaryAtStart)
-        : (Map[String, Double], Map[String, Double]) = try {
-      import scala.jdk.CollectionConverters._
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("bench_last.json")), "UTF-8"))
-      def block(field: String): Map[String, Double] =
-        root.path(field).properties().asScala
-          .map(e => e.getKey -> e.getValue.asDouble()).toMap
-      (block("queries_min"), block("canary"))
-    } catch { case _: Throwable => (Map.empty, Map.empty) }
-    // INCREMENTAL per-line emission: every completed measurement is
-    // appended to bench_progress.jsonl AND printed as its own stdout
-    // JSONL event the moment it exists — a timeout/kill/crash at any
-    // point leaves every already-measured line parseable (r19's rc=124
-    // destroyed ~25 minutes of completed measurements because the old
-    // emission was one JSON line at the very end).
-    val progressPath = java.nio.file.Paths.get("bench_progress.jsonl")
-    try java.nio.file.Files.deleteIfExists(progressPath)
-    catch { case _: Throwable => () }
-    def emitEvent(json: String): Unit = {
-      println(json)
-      System.out.flush()
-      try java.nio.file.Files.write(progressPath,
-        (json + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case _: Throwable => () }
-    }
-    val shedLines = scala.collection.mutable.LinkedHashSet.empty[String]
-    // comma-separated allowlist for micro-benching one query while tuning
-    // (skips the recall harness too unless an ann_* name is listed)
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    def wanted(name: String): Boolean = only.forall(_.contains(name))
-    // environment self-diagnosis, captured at run START: a contaminated run
-    // (another sbt/test JVM stealing the 32 cores) shows up as loadavg ≫ 0
-    // and java_procs > 1, so a phantom 3-7x per-query regression is
-    // machine-attributable to contention instead of burning a round on it
-    val loadavgStart: String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split("\\s+").take(3).mkString(",")
-      catch { case _: Throwable => "" }
-    val javaProcs: Int =
-      try new java.io.File("/proc").listFiles()
-        .filter(f => f.isDirectory && f.getName.forall(_.isDigit))
-        .count { d =>
-          try scala.io.Source.fromFile(s"${d.getPath}/comm").mkString.trim
-            .contains("java")
-          catch { case _: Throwable => false }
-        }
-      catch { case _: Throwable => -1 }
-    val spark = Engine.applyTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm-up actions so JVM/codegen/streaming-machinery startup isn't
-    // billed to the first query that happens to hit each engine path
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    locally {
-      import org.apache.spark.sql.streaming.Trigger
-      val raw = spark.read.parquet(s"$sfDir/region.parquet")
-      val q = spark.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "region.parquet").parquet(sfDir)
-        .groupBy("r_name").count()
-        .writeStream.format("memory").queryName("bench_warm")
-        .option("checkpointLocation", graft.streaming.StreamingPipelines
-          .scratchCheckpoint(spark, "bench_warm"))
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    // first failure message per line, kept for the side artifact: r15's
-    // 39-failure run printed every diagnosis to stderr and the driver's
-    // capture kept none of it — the root cause had to be re-derived from
-    // the failure PATTERN a round later. bench_failed_msgs.json persists
-    // the messages whenever failed is non-empty.
-    val failedMsgs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def noteFail(name: String, msg: String): Unit = {
-      failed += name
-      failedMsgs.getOrElseUpdate(name, Option(msg).getOrElse(""))
-      System.err.println(s"[bench] $name FAILED: $msg")
-    }
-    // (name, median, min) over `iters` SUCCESSFUL samples; a failing query
-    // is not retried — it lands in `failed` (visible in the bench line) and
-    // its elapsed time is never mixed into the stats, so a fast failure
-    // can't read as a speedup. A query with zero successful samples is
-    // omitted from the per-query maps entirely.
-    var timedLineNo = 0
-    def timed(name: String, action: () => Unit): Option[(String, Double, Double)] = {
-      val effIters = Bench.effectiveIters(iters, elapsedSec, budgetSec)
-      if (effIters < iters && shedLines.add(name))
-        System.err.println(f"[bench] budget ($budgetSec%.0fs) crossed at " +
-          f"$elapsedSec%.0fs — $name sheds to 1 iter")
-      // membw sampled BEFORE the line runs, for heavy lines (record min
-      // > 1s — the ones a trough inflates most) and every 10th line as a
-      // background rhythm: the r20 driver window's trough sat between the
-      // run-endpoint gauges and was invisible in the per-line artifact
-      timedLineNo += 1
-      val membwHere: Option[Double] =
-        if (recordMinsAtStart.get(name).exists(_ > 1.0) ||
-            timedLineNo % 10 == 1) Bench.membwGauge()
-        else scala.None
-      val samples = Seq.newBuilder[Double]
-      var i = 0
-      while (i < effIters && !failed.contains(name)) {
-        val t0 = System.nanoTime()
-        var ok = true
-        try action()
-        catch { case e: Throwable =>
-          ok = false
-          noteFail(name, String.valueOf(e.getMessage))
-        }
-        // cache drop INSIDE the measurement: a query that persists pays to
-        // build AND to drop its cache, and no iteration or successor query
-        // ever rides a predecessor's persisted frame
-        spark.catalog.clearCache()
-        if (ok) samples += (System.nanoTime() - t0) / 1e9
-        i += 1
-      }
-      val s = samples.result().sorted
-      if (s.isEmpty) scala.None
-      else {
-        val out = (name, s(s.size / 2), s.head)
-        emitEvent(Bench.benchLineEvent(name, out._2, out._3, effIters,
-          elapsedSec, membwHere))
-        Some(out)
-      }
-    }
-    // CANARY: a fixed 20-query cross-family subset timed FIRST in the
-    // process, before any other harness block has run. Round 10's audit
-    // found +30% uniform late-process creep on 125 shared lines (untouched
-    // relational queries drifting in lockstep with everything else) —
-    // JVM-level pressure from packing 171 sequential queries into one
-    // process (codegen cache, GC, catalog growth), not operator
-    // regressions. Cross-round trend comparisons should read THIS block:
-    // its numbers can never absorb later-query JVM pressure because
-    // nothing runs before it. The same queries still run in the main loop
-    // below, so the `queries` block stays comparable with old rounds; the
-    // canary-vs-main delta for the same name MEASURES the in-process creep.
-    val canaryNames = Seq("q1_pricing_summary", "q2_top_orders",
-      "q3_shipping_priority", "q5_local_supplier", "q7_window_topk",
-      "q9_set_ops", "q12_case_agg", "q16_json_extract", "q21_date_parts",
-      "q25_range_join", "q30_range_frame", "dd_exact", "dd_simhash",
-      "dd_minhash_lsh", "ta_langid", "ta_quality", "ta_tokens",
-      "cp_dedup_lines", "cp_pack_sequences", "cp_mix_weighted")
-    val canaryResults: Seq[(String, Double, Double)] =
-      if (only.isDefined) Seq.empty
-      else Queries.all.filter(q => canaryNames.contains(q._1))
-        .flatMap { case (name, q) =>
-          // timed under a distinct key so a canary failure can't suppress
-          // the main-loop timing of the same query (timed() skips names
-          // already in `failed`); reported under the bare name
-          timed(s"canary_$name", () => { q.fn(spark, sfDir).count(); () })
-            .map { case (_, med, mn) => (name, med, mn) }
-        }
-    // OPT-IN EARLY ABORT for record attempts (SPARK_GRAFT_BENCH_ABORT_
-    // DEGRADED=1): five r20 attempts each burned ~20 minutes before the
-    // end-of-run guard routed them aside — the canary block plus a membw
-    // re-probe already carry the verdict two minutes in. When the LIVE
-    // canary runs >1.4× the committed record's, or the re-probed
-    // bandwidth (best of 3 — a single low sample is noise, a capped
-    // hypervisor window is low on ALL of them) sits under 2.5 GB/s, stop
-    // now: the per-line JSONL keeps what was measured, the guard artifact
-    // names the route, and nothing touches bench_last*.json. NEVER set by
-    // the driver — its runs must complete the full surface whatever the
-    // window (shed, don't die).
-    if (sys.env.get("SPARK_GRAFT_BENCH_ABORT_DEGRADED").contains("1") &&
-        canaryResults.nonEmpty) {
-      val curCanaryMeds = canaryResults.map { case (k, m, _) => k -> m }.toMap
-      val liveRatio = Bench.canaryDegradation(recordCanaryAtStart, curCanaryMeds)
-      // 2.5 GB/s: this box's HEALTHY gauge reading ranges 5-10 (the r21
-      // clean-record window measured 5.2-5.3 at 2.1 GHz with every guard
-      // green), while the documented capped-hypervisor troughs read
-      // 0.1-1.2 — the threshold sits between the two regimes
-      val probe = (1 to 3).flatMap(_ => Bench.membwGauge()).maxOption
-      val degraded = liveRatio.exists(_ > 1.4) || probe.exists(_ < 2.5)
-      if (degraded) {
-        val why = f"live canary ${liveRatio.getOrElse(-1.0)}%.2fx record, " +
-          f"membw re-probe ${probe.getOrElse(-1.0)}%.1f GB/s"
-        System.err.println(s"[bench] ABORTING (degraded window): $why — " +
-          "per-line JSONL preserved, records untouched")
-        emitEvent(f"""{"metric":"bench_abort","reason":${Bench.jstr(why)},"elapsed_sec":$elapsedSec%.1f}""")
-        val contendedNow = Bench.contentionTriggers(javaProcs,
-          try loadavgStart.split(",").headOption.map(_.toDouble).getOrElse(0.0)
-          catch { case _: Throwable => 0.0 }, cpusInt).nonEmpty
-        val guard = s"""{"route":"aborted_degraded","reason":${Bench.jstr(why)},""" +
-          s""""target":"none","written_at_epoch_ms":${System.currentTimeMillis()},""" +
-          s""""contended":$contendedNow,"failed_count":0,""" +
-          s""""git":${Bench.jstr(gitSha)},"sf":${Bench.jstr(sfDir)}}"""
-        try java.nio.file.Files.write(
-          java.nio.file.Paths.get("bench_guard.json"),
-          (guard + "\n").getBytes("UTF-8"))
-        catch { case _: Throwable => () }
-        spark.stop()
-        return
-      }
-    }
-    // JIT/CODEGEN WARM-UP SWEEP (r22, VERDICT #2): one discarded 1-iter
-    // pass over the canary's family-spanning subset. The r21 execution
-    // reorder (core surface before diagnostics — correct for shedding)
-    // removed the minutes of split-harness work that used to run BEFORE
-    // the main loop, so sub-second relational lines ran JIT-cold and read
-    // 1.3-1.7x slower across the r21 boundary (joinless queries moved
-    // identically; the canary read 0.947 — a measurement artifact, not a
-    // regression). The sweep runs AFTER the canary block, not before it:
-    // the canary has always been the first-timed block in the process and
-    // re-warming it would shift the cross-round anchor it exists to
-    // provide; the main loop is what needs r20-comparable warmth.
-    if (only.isEmpty) {
-      Queries.all.filter(q => canaryNames.contains(q._1))
-        .foreach { case (_, q) =>
-          try { q.fn(spark, sfDir).count(); () }
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-      spark.catalog.clearCache()
-    }
-    // index-build vs query-serving SPLIT lines for the trained-IVF family:
-    // the full-query lines below (ann_ivf_topk, ann_ivf_disk, dd_semdedup)
-    // conflate quantizer training / index write with answering, so a
-    // training change reads as a query regression. These lines attribute:
-    // *_train/_build time the model/index construction alone, *_query time
-    // serving against a PREBUILT quantizer/index (same K=16 config as the
-    // oracle queries).
-    val splitNames = Seq("ann_ivf_train", "ann_ivf_query",
-      "ann_ivf_disk_build", "ann_ivf_disk_query", "dd_semdedup_query",
-      "ann_ivf_balanced_train", "ann_ivf_balanced_query",
-      "ann_ivf_append_delta", "ann_pq_train", "ann_pq_query",
-      "ann_ivf_pq_train", "ann_ivf_pq_query", "ann_ivf_pq_rerank_serve",
-      "ann_ivf_pq_disk_build", "ann_ivf_pq_disk_query",
-      "ann_opq_train", "ann_opq_query")
-    def ivfSplitResults(): Seq[(String, Double, Double)] =
-      if (!splitNames.exists(wanted)) Seq.empty else try {
-        def rmTree(dir: String): Unit = {
-          import java.nio.file.{Files, Paths}
-          import scala.jdk.CollectionConverters._
-          val root = Paths.get(dir)
-          if (Files.exists(root)) {
-            val walk = Files.walk(root)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(Files.delete)
-            finally walk.close()
-          }
-        }
-        val e = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding"))
-        // prerequisites built only for the lines that need them, and the
-        // untimed disk index is removed after the run — the build line's
-        // per-sample indexes are deleted INSIDE the thunk so N samples
-        // don't leave N corpus copies under /tmp
-        val needCents = Seq("ann_ivf_query", "dd_semdedup_query").exists(wanted)
-        val cents = if (needCents)
-          operators.Ann.trainCentroids(e, kCentroids = 16)
-        else Array.empty[Array[Double]]
-        val balCents = if (wanted("ann_ivf_balanced_query"))
-          operators.Ann.trainCentroidsBalanced(e, kCentroids = 16,
-            balanceFactor = 1.2, maxSplitRounds = 4)
-        else Array.empty[Array[Double]]
-        val pqCb = if (wanted("ann_pq_query"))
-          operators.Ann.trainPqCodebooks(e)
-        else Array.empty[Array[Array[Double]]]
-        val ivfPqModel =
-          if (wanted("ann_ivf_pq_query") || wanted("ann_ivf_pq_rerank_serve"))
-          operators.Ann.ivfPqTrain(e, kCentroids = 16)
-        else (Array.empty[Array[Double]], Array.empty[Array[Array[Double]]])
-        val opqModel = if (wanted("ann_opq_query"))
-          operators.Ann.opqTrain(e)
-        else (Array.empty[Array[Double]], Array.empty[Array[Array[Double]]])
-        // day-0 index the append-delta line appends day-1 batches into:
-        // built once untimed, so the line prices ONLY the incremental
-        // assign+append of the 20% batch (the r9 daily-arrival path)
-        val appendDir = Bench.ownedTmpDir("bench_ivf_app").toString
-        if (wanted("ann_ivf_append_delta"))
-          operators.Ann.ivfIndexWriteTrained(
-            e.filter(col("vec_id") % 5 =!= 0), appendDir, kCentroids = 16)
-        val diskDir = Bench.ownedTmpDir("bench_ivf_idx").toString
-        if (wanted("ann_ivf_disk_query"))
-          operators.Ann.ivfIndexWriteTrained(e, diskDir, kCentroids = 16)
-        // persisted IVF-PQ index for the _query line: built once untimed
-        // at the oracle query's config (the conflated ann_ivf_pq_disk
-        // line keeps build+train+encode+write+query in one number; these
-        // attribute it)
-        val pqDiskDir = Bench.ownedTmpDir("bench_ivfpq_idx").toString
-        if (wanted("ann_ivf_pq_disk_query"))
-          operators.Ann.ivfPqIndexWrite(e, pqDiskDir, kCentroids = 16,
-            subspaces = 8, codes = 16)
-        spark.catalog.clearCache()
-        val out = Seq[(String, () => Unit)](
-          "ann_ivf_train" -> (() =>
-            { operators.Ann.trainCentroids(e, kCentroids = 16); () }),
-          "ann_ivf_query" -> (() =>
-            { operators.Ann.ivfTopKFromCentroids(e, col("vec_id") < 10,
-                cents, 5, 2).count(); () }),
-          "ann_ivf_disk_build" -> (() => {
-            val d = Bench.ownedTmpDir("bench_ivf_build").toString
-            try operators.Ann.ivfIndexWriteTrained(e, d, kCentroids = 16)
-            finally rmTree(d)
-          }),
-          "ann_ivf_disk_query" -> (() =>
-            { operators.Ann.ivfIndexTopK(e.filter(col("vec_id") < 10),
-                diskDir, 5, 2).count(); () }),
-          "dd_semdedup_query" -> (() =>
-            { operators.Ann.semanticDedupWith(e, cents,
-                threshold = 0.35).count(); () }),
-          "ann_ivf_balanced_train" -> (() =>
-            { operators.Ann.trainCentroidsBalanced(e, kCentroids = 16,
-                balanceFactor = 1.2, maxSplitRounds = 4); () }),
-          "ann_ivf_balanced_query" -> (() =>
-            { operators.Ann.ivfTopKFromCentroids(e, col("vec_id") < 10,
-                balCents, 5, 2).count(); () }),
-          "ann_ivf_append_delta" -> (() =>
-            operators.Ann.ivfIndexAppend(
-              e.filter(col("vec_id") % 5 === 0), appendDir)),
-          // PQ training (joint per-subspace Lloyd) vs ADC serving against
-          // prebuilt codebooks — same split discipline as the IVF family
-          "ann_pq_train" -> (() =>
-            { operators.Ann.trainPqCodebooks(e); () }),
-          "ann_pq_query" -> (() =>
-            { operators.Ann.pqTopKFromCodebooks(e, col("vec_id") < 10,
-                pqCb, 5).count(); () }),
-          // residual IVF-PQ: coarse+codebook training vs ADC serving from
-          // the prebuilt pair — completes the trained-index family's split
-          "ann_ivf_pq_train" -> (() =>
-            { operators.Ann.ivfPqTrain(e, kCentroids = 16); () }),
-          "ann_ivf_pq_query" -> (() =>
-            { operators.Ann.ivfPqTopKFrom(e, col("vec_id") < 10,
-                ivfPqModel._1, ivfPqModel._2, 5, 2).count(); () }),
-          // exact-rerank serving (IVFx,PQy,RFlat): ADC top-100 at probe 6
-          // re-scored with true vectors — the recall harness gates this
-          // operating point's quality; this line prices its latency.
-          // `_serve` suffix since r19: the bare name COLLIDED with the
-          // main-loop oracle query (train+rerank inline), emitting the
-          // key twice in the queries JSON — last-wins parsing hid the
-          // oracle line entirely and made r17→r18's apparent 1.39→2.17
-          // "regression" a comparison of the split line against itself
-          // while the inline line sat flat (2.22→2.16) and the serving
-          // code was diff-identical. One name, one measurement.
-          "ann_ivf_pq_rerank_serve" -> (() =>
-            { operators.Ann.ivfPqTopKRerank(e, col("vec_id") < 10,
-                ivfPqModel._1, ivfPqModel._2, 5, nProbe = 6,
-                refine = 100).count(); () }),
-          // persisted IVF-PQ index, split like ann_ivf_disk: _build
-          // prices train+encode+partitioned-write, _query prices serving
-          // against the PREBUILT store (partition-pruned codes scan +
-          // broadcast ADC — the shape a 100 TB deployment actually pays
-          // per query)
-          "ann_ivf_pq_disk_build" -> (() => {
-            val d = Bench.ownedTmpDir("bench_ivfpq_build").toString
-            try operators.Ann.ivfPqIndexWrite(e, d, kCentroids = 16,
-              subspaces = 8, codes = 16)
-            finally rmTree(d)
-          }),
-          "ann_ivf_pq_disk_query" -> (() =>
-            { operators.Ann.ivfPqIndexTopK(e.filter(col("vec_id") < 10),
-                pqDiskDir, 5, 2).count(); () }),
-          // OPQ: alternating rotation+codebook training (driver-local
-          // over the capped sample + one engine pass for the serving
-          // codebooks) vs rotated-ADC serving from the prebuilt model
-          "ann_opq_train" -> (() =>
-            { operators.Ann.opqTrain(e); () }),
-          "ann_opq_query" -> (() =>
-            { operators.Ann.opqTopKFrom(e, col("vec_id") < 10,
-                opqModel._1, opqModel._2, 5).count(); () })
-        ).filter(q => wanted(q._1)).flatMap { case (name, f) =>
-          timed(name, f) }
-        out
-      } catch { case ex: Throwable =>
-        noteFail("ivf_split", s"harness: ${ex.getMessage}")
-        Seq.empty
-      } finally Bench.sweepTmpDirs("bench_ivf_app", "bench_ivf_idx",
-        "bench_ivf_build", "bench_ivfpq_idx", "bench_ivfpq_build")
-    // phase-split lines for the assembly composition (cp_assembly
-    // conflates four stages; a creep in its line is unattributable
-    // without these): each stage is timed against its PREDECESSOR'S
-    // OUTPUT STAGED TO PARQUET (not cache — timed() clears the cache
-    // between samples), so a line prices exactly one stage's work.
-    val assemblySplitNames = Seq("cp_assembly_clean", "cp_assembly_survivors",
-      "cp_assembly_mix", "cp_assembly_pack", "st_overhead")
-    def assemblySplitResults(): Seq[(String, Double, Double)] =
-      if (!assemblySplitNames.exists(wanted)) Seq.empty else try {
-        def rmTree(dir: String): Unit = {
-          import java.nio.file.{Files, Paths}
-          import scala.jdk.CollectionConverters._
-          val root = Paths.get(dir)
-          if (Files.exists(root)) {
-            val walk = Files.walk(root)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(Files.delete)
-            finally walk.close()
-          }
-        }
-        val tmp = Bench.ownedTmpDir("bench_asm").toString
-        val docs = Tables.documents(spark, sfDir)
-        val rates = Seq("en" -> 0.8, "de" -> 0.5, "es" -> 0.25,
-          "fr" -> 0.5, "zh" -> 0.1)
-        // prerequisites staged once, untimed
-        operators.Corpus.segmentDedup(docs, segWords = 8, maxDf = 2)
-          .select(col("doc_id"), col("clean_text").as("text"))
-          .write.parquet(s"$tmp/cleaned")
-        val cleaned = spark.read.parquet(s"$tmp/cleaned")
-        operators.NearDup.survivors(cleaned).select(col("doc_id"))
-          .write.parquet(s"$tmp/surv")
-        val surv = spark.read.parquet(s"$tmp/surv")
-        val candidates = cleaned.join(surv, "doc_id")
-          .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-        operators.Corpus.mixWeighted(candidates, rates, keepCols = true)
-          .select(col("doc_id"), col("text"))
-          .write.parquet(s"$tmp/mixed")
-        val mixed = spark.read.parquet(s"$tmp/mixed")
-        spark.catalog.clearCache()
-        val out = Seq[(String, () => Unit)](
-          "cp_assembly_clean" -> (() =>
-            { operators.Corpus.segmentDedup(docs, segWords = 8, maxDf = 2)
-                .count(); () }),
-          "cp_assembly_survivors" -> (() =>
-            { operators.NearDup.survivors(cleaned).count(); () }),
-          "cp_assembly_mix" -> (() =>
-            { operators.Corpus.mixWeighted(candidates, rates).count(); () }),
-          "cp_assembly_pack" -> (() =>
-            { operators.Corpus.packSequences(mixed, budget = 256).count(); () }),
-          // the st_* family's FIXED cost: a minimal AvailableNow stream
-          // over the 5-row region table prices session + checkpoint +
-          // state-store machinery with ~zero data — if st_* lines creep
-          // together while this line creeps equally, the regression is
-          // streaming overhead, not an operator
-          "st_overhead" -> (() => {
-            import org.apache.spark.sql.streaming.Trigger
-            val ss = spark.newSession()
-            ss.conf.set("spark.sql.shuffle.partitions", "8")
-            val raw = ss.read.parquet(s"$sfDir/region.parquet")
-            val name = s"bench_st_overhead_${System.nanoTime()}"
-            val q = ss.readStream.schema(raw.schema)
-              .option("pathGlobFilter", "region.parquet").parquet(sfDir)
-              .groupBy(col("r_name")).count()
-              .writeStream.format("memory").queryName(name)
-              .option("checkpointLocation", graft.streaming
-                .StreamingPipelines.scratchCheckpoint(ss, name))
-              .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-            q.awaitTermination()
-          })
-        ).filter(q => wanted(q._1)).flatMap { case (name, f) =>
-          timed(name, f) }
-        rmTree(tmp)
-        out
-      } catch { case ex: Throwable =>
-        noteFail("assembly_split", s"harness: ${ex.getMessage}")
-        Seq.empty
-      } finally Bench.sweepTmpDirs("bench_asm")
-    // train/serve split for cp_quality_classifier (the heaviest bench
-    // line): _train prices features + NB init + the GD iterations at the
-    // oracle config; _score prices one serving pass over the corpus
-    // against a PREBUILT model — the shape that actually runs at 100 TB
-    // (training sees the labeled slice; serving sees everything).
-    val qcSplitNames = Seq("cp_qc_train", "cp_qc_score")
-    def qcSplitResults(): Seq[(String, Double, Double)] =
-      if (!qcSplitNames.exists(wanted)) Seq.empty else try {
-        val docs = Tables.documents(spark, sfDir)
-        val pos = col("lang") === "en"
-        val (w, b) =
-          if (wanted("cp_qc_score"))
-            operators.Corpus.qualityClassifierTrain(docs, pos,
-              buckets = 256, iters = 4, lr = BigDecimal("0.02"))
-          else (Map.empty[Int, BigDecimal], BigDecimal(0))
-        spark.catalog.clearCache()
-        Seq[(String, () => Unit)](
-          "cp_qc_train" -> (() =>
-            { operators.Corpus.qualityClassifierTrain(docs, pos,
-                buckets = 256, iters = 4, lr = BigDecimal("0.02")); () }),
-          "cp_qc_score" -> (() =>
-            { operators.Corpus.qualityClassifierScoreWith(docs, w, b,
-                buckets = 256).count(); () })
-        ).filter(q => wanted(q._1)).flatMap { case (name, f) =>
-          timed(name, f) }
-      } catch { case ex: Throwable =>
-        noteFail("qc_split", s"harness: ${ex.getMessage}")
-        Seq.empty
-      }
-    // phase-split lines for dd_ngram_jaccard (r9's 1.5-2.1× drifter):
-    // _hashes prices the one text pass (shingle + md5 + project),
-    // _candidates prices the posting-list self-join + exact verify over
-    // PREBUILT hash rows staged to parquet — so a drift in the full
-    // dd_ngram_jaccard line is attributable to exactly one phase.
-    val ngramSplitNames = Seq("dd_ngram_hashes", "dd_ngram_candidates")
-    def ngramSplitResults(): Seq[(String, Double, Double)] =
-      if (!ngramSplitNames.exists(wanted)) Seq.empty else try {
-        def rmTree(dir: String): Unit = {
-          import java.nio.file.{Files, Paths}
-          import scala.jdk.CollectionConverters._
-          val root = Paths.get(dir)
-          if (Files.exists(root)) {
-            val walk = Files.walk(root)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(Files.delete)
-            finally walk.close()
-          }
-        }
-        val tmp = Bench.ownedTmpDir("bench_ngram").toString
-        val docs = Tables.documents(spark, sfDir)
-        if (wanted("dd_ngram_candidates"))
-          operators.NearDup.ngramHashRows(docs).write.parquet(s"$tmp/hv")
-        spark.catalog.clearCache()
-        val out = Seq[(String, () => Unit)](
-          "dd_ngram_hashes" -> (() =>
-            { operators.NearDup.ngramHashRows(docs).count(); () }),
-          "dd_ngram_candidates" -> (() => {
-            val hv = spark.read.parquet(s"$tmp/hv").persist()
-            try { operators.NearDup.ngramJaccardFromHashes(hv).count(); () }
-            finally hv.unpersist()
-          })
-        ).filter(q => wanted(q._1)).flatMap { case (name, f) =>
-          timed(name, f) }
-        rmTree(tmp)
-        out
-      } catch { case ex: Throwable =>
-        noteFail("ngram_split", s"harness: ${ex.getMessage}")
-        Seq.empty
-      } finally Bench.sweepTmpDirs("bench_ngram")
-    // build/probe split for the v2 dedup signature index, plus the v1
-    // stored-signature probe as a CONTRAST line: same 10% daily batch,
-    // same 90% reference store — the delta is the corpus-scale
-    // `collect_set` + full table scans the v2 layout moved to build time
-    // (dd_index_probe is the serving-side number of the 100 TB
-    // daily-crawl claim, like ann_ivf_pq_disk_query for ANN)
-    val sigIndexSplitNames =
-      Seq("dd_index_build", "dd_index_probe", "dd_stored_probe")
-    def sigIndexSplitResults(): Seq[(String, Double, Double)] =
-      if (!sigIndexSplitNames.exists(wanted)) Seq.empty else try {
-        def rmTree(dir: String): Unit = {
-          import java.nio.file.{Files, Paths}
-          import scala.jdk.CollectionConverters._
-          val root = Paths.get(dir)
-          if (Files.exists(root)) {
-            val walk = Files.walk(root)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(Files.delete)
-            finally walk.close()
-          }
-        }
-        val docs = Tables.documents(spark, sfDir)
-        val ref = docs.filter(col("doc_id") % 10 =!= 0)
-        val batch = docs.filter(col("doc_id") % 10 === 0)
-        val idxDir = Bench.ownedTmpDir("bench_sigidx").toString
-        if (wanted("dd_index_probe"))
-          operators.NearDup.writeSignatureIndex(ref, idxDir)
-        val v1Dir = Bench.ownedTmpDir("bench_sigv1").toString
-        if (wanted("dd_stored_probe"))
-          operators.NearDup.writeReferenceSignatures(ref, v1Dir)
-        spark.catalog.clearCache()
-        Seq[(String, () => Unit)](
-          "dd_index_build" -> (() => {
-            val d = Bench.ownedTmpDir("bench_sigbuild").toString
-            try operators.NearDup.writeSignatureIndex(ref, d)
-            finally rmTree(d)
-          }),
-          "dd_index_probe" -> (() =>
-            { operators.NearDup.dedupAgainstIndex(batch, idxDir)
-                .count(); () }),
-          "dd_stored_probe" -> (() =>
-            { operators.NearDup.dedupAgainstStored(batch, v1Dir)
-                .count(); () })
-        ).filter(q => wanted(q._1)).flatMap { case (name, f) =>
-          timed(name, f) }
-      } catch { case ex: Throwable =>
-        noteFail("sig_index_split", s"harness: ${ex.getMessage}")
-        Seq.empty
-      } finally Bench.sweepTmpDirs("bench_sigidx", "bench_sigv1",
-        "bench_sigbuild")
-    // EXECUTION ORDER (r21, VERDICT #3): the core declared surface runs
-    // FIRST (right after the canary), the attribution/diagnostic families
-    // (split harnesses, skew rehearsal — and further down the scale
-    // twins) LAST. Budget shedding hits whatever runs latest, so a
-    // degraded window now sheds diagnostics before it degrades any core
-    // line to an unrepresentative 1-iter trough sample (r20 shed 36 core
-    // cp_*/op_*/st_* lines while the skew/scale diagnostics had already
-    // run at 3 iters). ++ evaluates left to right, so the def-wrapped
-    // split harnesses run after the main loop completes.
-    val results =
-      Queries.all.filter(q => wanted(q._1)).flatMap { case (name, q) =>
-        timed(name, () => { q.fn(spark, sfDir).count(); () }) } ++
-      ivfSplitResults() ++ assemblySplitResults() ++ qcSplitResults() ++
-      ngramSplitResults() ++ sigIndexSplitResults() ++
-      // scale rehearsal: worst-case skewed corpora through the capped pair
-      // generators — each skewed_* line should stay within ~2x of its
-      // uniform twin above, or a cap has stopped doing its job
-      operators.SkewRehearsal.queries(spark, sfDir)
-        .filter(q => wanted(q._1)).flatMap { case (name, f) =>
-        timed(name, () => { f(); () }) }
-    // MID-RUN CANARY ECHO: re-time a light cross-family subset NOW (one
-    // iter each — these lines ran first in the process) and compare to
-    // the run's own start-of-process canary medians. The four degraded
-    // r19 windows WORSENED through the afternoon; a start-only canary
-    // can't see onset INSIDE a run (r18's in-run drift slipped every
-    // per-family guard at once). The ratio is in the record line
-    // (`canary_echo_ratio`) so a degraded run's artifact says whether
-    // the host was already slow at start or turned slow mid-run.
-    val canaryEchoRatio: Option[Double] =
-      if (only.isDefined || canaryResults.isEmpty) scala.None
-      else {
-        // echo subset SPANS FAMILIES (one relational + dedup + text +
-        // corpus) — take(5) was all q* lines, blind to the dedup/text
-        // families the measured bandwidth-degradation mode hits hardest
-        val echoNames = Set("q1_pricing_summary", "dd_exact",
-          "dd_minhash_lsh", "ta_langid", "cp_dedup_lines")
-        val echo = Queries.all.filter(q => echoNames.contains(q._1))
-          .flatMap { case (name, q) =>
-            val t0 = System.nanoTime()
-            val ok = try { q.fn(spark, sfDir).count(); true }
-              catch { case scala.util.control.NonFatal(_) => false }
-            spark.catalog.clearCache()
-            if (ok) Some(name -> (System.nanoTime() - t0) / 1e9)
-            else scala.None
-          }.toMap
-        val start = canaryResults
-          .collect { case (n, med, _) if echo.contains(n) => n -> med }
-        if (start.size < 3) scala.None
-        else {
-          val ratios = start
-            .map { case (n, m) => echo(n) / math.max(m, 1e-9) }.sorted
-          val r = ratios(ratios.size / 2)
-          emitEvent(f"""{"metric":"canary_echo","ratio":$r%.2f,"elapsed_sec":$elapsedSec%.1f}""")
-          if (r > 1.4) System.err.println(f"[bench] mid-run canary echo " +
-            f"$r%.2fx the start-of-process medians — the host degraded " +
-            "DURING this run")
-          Some(r)
-        }
-      }
-    // SCALE-GROWTH sanity: for EVERY multi-second operator family,
-    // wall-time at the main SF over wall-time at sf0.01 (10× less data),
-    // in the same process. The capped/blocked candidate generators are
-    // designed for linear-ish growth; a ratio far above the 10× data
-    // factor means something went quadratic between the two scales — the
-    // cheapest local signal for the 100 TB claim. The sf0.1 side reuses
-    // the main loop's MIN ([[Bench.scaleGateRatio]] — mins, not medians,
-    // are the cross-measurement comparable statistic; r18's official run
-    // FAILED on a median spike over a line whose min-ratio was honest);
-    // only the sf0.01 side runs here. Fixed per-job overhead inflates the
-    // small-SF denominator, so the ratio UNDERSTATES growth slightly —
-    // the gate (12×) is set above the data factor to match. (The
-    // embeddings table grows 4×, not 10×, between the two SFs, so the
-    // ann_* ratios sit naturally lower.)
-    val mainMin = results.map { case (n, _, mn) => n -> mn }.toMap
-    val smallSfDir = sfDir.replace("sf0.1", "sf0.01")
-    // name -> (dir => thunk): regular queries rerun their Q fn; split-
-    // harness lines (ann_pq_train, cp_qc_train) and skew-rehearsal lines
-    // rebuild their exact harness shape against the small dir
-    val scaleFns: Seq[(String, String => () => Unit)] =
-      Seq("dd_minhash_lsh", "dd_semdedup", "dd_exact_substr", "ann_ivf_pq",
-        "cp_assembly", "dd_pagerank", "dd_novelty", "st_novelty",
-        "ta_bpe_tokens").flatMap { n =>
-        Queries.all.find(_._1 == n).map { case (_, q) =>
-          n -> ((dir: String) => () => { q.fn(spark, dir).count(); () })
-        }
-      } ++ Seq(
-        "ann_pq_train" -> ((dir: String) => () => {
-          operators.Ann.trainPqCodebooks(Tables.embeddings(spark, dir)
-            .select(col("vec_id"), col("embedding"))); () }),
-        "cp_qc_train" -> ((dir: String) => () => {
-          operators.Corpus.qualityClassifierTrain(Tables.documents(spark, dir),
-            col("lang") === "en", buckets = 256, iters = 4,
-            lr = BigDecimal("0.02")); () }),
-        "skewed_dd_pagerank" -> ((dir: String) => () => {
-          operators.SkewRehearsal.queries(spark, dir)
-            .find(_._1 == "skewed_dd_pagerank")
-            .foreach { case (_, f) => f() }; () })
-      )
-    val scaleRatio: Seq[(String, Double)] =
-      if (only.isDefined || smallSfDir == sfDir ||
-          !new java.io.File(smallSfDir).isDirectory) Seq.empty
-      else scaleFns.flatMap { case (n, mk) =>
-        // a line whose main-loop min is missing (failed or filtered)
-        // has no numerator — skip rather than time the small side for
-        // nothing
-        mainMin.get(n).flatMap { m0 =>
-          timed(s"scale_small_$n", () => mk(smallSfDir)())
-            .flatMap { case (_, _, smallMin) =>
-              var m = m0
-              Bench.scaleGateRatio(Seq(m), Seq(smallMin)).map { r0 =>
-                var r = r0
-                if (r > 12.0) {
-                  // ONE retry of the LARGE-side line before declaring
-                  // superlinear growth: the two sides run minutes apart in
-                  // one process, so a late contention spike can inflate
-                  // even the min of the main loop's samples (all three
-                  // taken inside the spike). A fresh sample taken NOW —
-                  // adjacent to the small-side measurement — either
-                  // confirms the growth (a truly superlinear line is slow
-                  // every time) or exposes the spike.
-                  val t0 = System.nanoTime()
-                  // NonFatal only: an OOM/interrupt in the retry must
-                  // surface, not read as "retry ran, growth confirmed"
-                  var retryErr: Option[String] = scala.None
-                  try {
-                    mk(sfDir)()
-                    m = math.min(m, (System.nanoTime() - t0) / 1e9)
-                  } catch { case scala.util.control.NonFatal(e) =>
-                    retryErr = Some(String.valueOf(e.getMessage)) }
-                  spark.catalog.clearCache()
-                  r = Bench.scaleGateRatio(Seq(m), Seq(smallMin)).getOrElse(r)
-                  if (r > 12.0) {
-                    val how = retryErr match {
-                      case Some(msg) =>
-                        s"a retry of the large-scale line ERRORED ($msg) — " +
-                        "ratio is the stale main-loop min"
-                      case scala.None =>
-                        "a retry of the large-scale line — growth is " +
-                        "superlinear between the two scales"
-                    }
-                    noteFail(s"scale_gate_$n",
-                      f"sf0.1/sf0.01 min-ratio $r%.1f > 12 (10x data) after " +
-                        how)
-                  }
-                }
-                n -> r
-              }
-            }
-        }
-      }
-    // approximation-quality audit: recall@10 of each ANN variant against
-    // the exact scorer on the same corpus/query split the ann_* queries
-    // use. lsh_multi should dominate lsh (more tables = higher hit
-    // probability); a recall collapse here is a quality regression the
-    // latency lines can't see.
-    val recall: Seq[(String, Double)] = if (
-      only.exists(s => !s.exists(_.startsWith("ann_")))) Seq.empty else try {
-      val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
-      val isQuery = col("vec_id") < 10
-      val k = 10
-      val exact = operators.Ann.bruteForceTopK(e, isQuery, k).persist()
-      exact.count()
-      // one OPQ model shared by the topk and rerank recall lines
-      lazy val opqModelR = operators.Ann.opqTrain(e)
-      // persisted IVF-PQ index at the API default (codes=256, the same
-      // config as the gated ann_ivf_pq point) — the disk serving points
-      // below are gated at the same floors as their in-memory twins
-      val pqIdxDir = Bench.ownedTmpDir("bench_ivfpq_recall").toString
-      operators.Ann.ivfPqIndexWrite(e, pqIdxDir, kCentroids = 16)
-      val out = Seq(
-        "ann_lsh_topk" -> operators.Ann.lshTopK(e, isQuery, k),
-        "ann_lsh_probe" -> operators.Ann.lshMultiProbeTopK(e, isQuery, k),
-        "ann_lsh_multi" -> operators.Ann.lshMultiTopK(e, isQuery, k),
-        // the `lsh` SECTION default resolves to the multi-table variant —
-        // this line pins the default path's recall by name (>= 0.5 gate)
-        "ann_lsh_default" -> operators.Ann.lshMultiTopK(e, isQuery, k),
-        // TRAINED quantizer at the oracle query's config (K=16, probe 2).
-        // NOTE a correction vs rounds <= 6: the old `ann_ivf_topk` recall
-        // (~0.97) used `vec_id < 16` centroids, which CONTAIN the query
-        // set — each query's own Voronoi cell held its neighbors by
-        // construction, inflating recall. `ann_ivf_untrained` below is the
-        // honest untrained baseline (centroid rows disjoint from queries);
-        // training must beat it at the same K/probe cost. On this
-        // synthetic corpus (near-zero cosine structure) recall tracks the
-        // probed fraction for ANY quantizer — clustered real embeddings
-        // are where the trained cells pull further ahead.
-        "ann_ivf_topk" -> operators.Ann.ivfTopKTrained(e, isQuery, k,
-          nProbe = 2, kCentroids = 16),
-        "ann_ivf_untrained" -> operators.Ann.ivfTopK(e, isQuery,
-          col("vec_id") >= 100 && col("vec_id") < 116, k),
-        // the BALANCED quantizer at the oracle query's config: hot-cell
-        // splitting must not cost recall vs the plain trained index
-        "ann_ivf_balanced" -> operators.Ann.ivfTopKTrainedBalanced(e,
-          isQuery, k, nProbe = 2, kCentroids = 16, balanceFactor = 1.2),
-        // the API default: K ~ sqrt(n) TRAINED cells, probes scaled so the
-        // probed fraction stays ~1/4 as the corpus grows — through the
-        // BALANCED trainer, which IS the section default since r14 (a
-        // no-op split pass on this uniform corpus: identical centroids,
-        // so this line also pins that the default flip cost no recall)
-        "ann_ivf_default" -> {
-          val kDef = math.max(2, math.round(math.sqrt(e.count().toDouble)).toInt)
-          operators.Ann.ivfTopKTrainedBalanced(e, isQuery, k,
-            nProbe = math.max(2, (kDef + 3) / 4))
-        },
-        // recall cost of JL compression (exact search over projected
-        // vectors vs over the originals) at two compression levels — the
-        // two points sketch the dimension/recall tradeoff curve a user
-        // picks project_dims from
-        "ann_rp_brute" -> operators.Ann.bruteForceTopK(
-          Tables.embeddings(spark, sfDir).select(col("vec_id"),
-            graft.functions.VectorFunctions
-              .randomProject(col("embedding"), 16, 64).as("embedding")),
-          isQuery, k),
-        "ann_rp_brute32" -> operators.Ann.bruteForceTopK(
-          Tables.embeddings(spark, sfDir).select(col("vec_id"),
-            graft.functions.VectorFunctions
-              .randomProject(col("embedding"), 32, 64).as("embedding")),
-          isQuery, k),
-        // TRAINED 16-dim basis vs ann_rp_brute's random one: the recall
-        // gap between these two lines is what PCA training buys at equal
-        // compression (AnnRecallSpec asserts the ordering)
-        "ann_pca_brute" -> {
-          val (mu, comps) = operators.Ann.pcaTrain(e, outDims = 16)
-          operators.Ann.bruteForceTopK(
-            operators.Ann.pcaProject(e, mu, comps), isQuery, k)
-        },
-        // PQ at the API DEFAULT (8 subspaces × 256 codes — the
-        // FAISS-standard PQx8 budget, made the default in round 11): the
-        // price of scoring from 8 bytes instead of 256 float bytes. On
-        // this synthetic near-orthogonal corpus the reconstruction cosine
-        // carries little signal; clustered real embeddings sit far higher
-        "ann_pq_topk" -> operators.Ann.pqTopK(e, isQuery, k),
-        // residual IVF-PQ at the API default (16 cells, probe 2, 8-bit
-        // codes): the probed-fraction ceiling (~nProbe/K of the corpus is
-        // even scanned) times the reconstruction fidelity of residual
-        // codes — compare against ann_ivf_topk (same pruning, exact
-        // scoring) to read the PQ compression's recall cost in isolation.
-        // GATED >= 0.2 below: the default operating point a section user
-        // gets must not be the max-compression floor (r10 shipped 0.04)
-        "ann_ivf_pq" -> operators.Ann.ivfPqTopK(e, isQuery, k,
-          kCentroids = 16, nProbe = 2),
-        // the 4-BIT floor (codes=16 — max compression, worst recall):
-        // what the oracle queries deliberately exercise; kept as the
-        // bottom rung of the ladder so the default's headroom stays
-        // measured. Ladder on this corpus: pq 0.40 (8-bit) vs 0.16
-        // (4-bit), ivf_pq 0.21 vs 0.04
-        "ann_pq_4bit" -> operators.Ann.pqTopK(e, isQuery, k, codes = 16),
-        "ann_ivf_pq_4bit" -> operators.Ann.ivfPqTopK(e, isQuery, k,
-          kCentroids = 16, nProbe = 2, codes = 16),
-        // EXACT-RERANK refinement (FAISS RefineFlat): the quantized pass
-        // widens to top-100 candidates, each re-scored with its true
-        // vector. For IVF-PQ the probe set is the recall CEILING no
-        // rerank can exceed (unprobed cells are never candidates:
-        // measured ceiling 0.60 at probe 4, rerank 0.56 — 93% of it), so
-        // the refined point pairs a wider probe (6/16) with the exact
-        // pass: measured 0.65 vs 0.21 unrefined. GATED >= 0.5 below.
-        "ann_ivf_pq_rerank" -> operators.Ann.ivfPqTopKRefined(e, isQuery,
-          k, kCentroids = 16, nProbe = 6, refine = 100),
-        // the PERSISTED index's serving points (gated like their
-        // in-memory twins): ADC from the partition-pruned codes scan at
-        // the API default, and the RFlat rerank over disk candidates —
-        // a regression anywhere in the store round-trip (write, models,
-        // prune, ADC from stored codes) collapses these, not the
-        // in-memory lines
-        "ann_ivf_pq_disk" -> operators.Ann.ivfPqIndexTopK(
-          e.filter(isQuery), pqIdxDir, k, nProbe = 2),
-        "ann_ivf_pq_disk_rerank" -> operators.Ann.ivfPqIndexTopKRerank(
-          e, isQuery, pqIdxDir, k, nProbe = 6, refine = 100),
-        // raw-vector PQ + rerank: no probe ceiling — reads the rerank
-        // lift in isolation (measured 0.91 vs ann_pq_topk's 0.40)
-        "ann_pq_rerank" -> operators.Ann.pqTopKRefined(e, isQuery, k,
-          refine = 100),
-        // the 4-BIT floor + rerank: the refinement must repair even the
-        // max-compression rung (the same exact pass, candidate QUALITY
-        // is the only difference from ann_pq_rerank). Nibble-coarse ADC
-        // scores rank so weakly that the repair needs a WIDER refine cut,
-        // not more probes: measured at refine 100 the ivf point is 0.16
-        // and RISING nProbe 6->16 only dilutes the cut further (0.14);
-        // widening the cut to 600 lifts it to 0.58 (gated >= 0.5 below).
-        // The cut is an ABSOLUTE candidate count — at corpus scale it
-        // stays a vanishing fraction; only this tiny bench corpus makes
-        // 600 look large. Raw pq: 0.16 -> 0.62 at refine 100 already.
-        "ann_pq_4bit_rerank" -> operators.Ann.pqTopKRefined(e, isQuery, k,
-          codes = 16, refine = 100),
-        "ann_ivf_pq_4bit_rerank" -> operators.Ann.ivfPqTopKRefined(e,
-          isQuery, k, kCentroids = 16, nProbe = 6, codes = 16,
-          refine = 600),
-        // OPQ (learned rotation before the PQ split, Ge et al. CVPR 2013)
-        // at the PQx8 default budget, plus its RFlat refinement — what
-        // the rotation buys at equal code budget vs ann_pq_topk /
-        // ann_pq_rerank. Measured 0.46 vs pq's 0.40 (rerank 0.92 vs
-        // 0.91) even on this near-isotropic synthetic corpus; clustered
-        // real embeddings are where OPQ pulls further ahead.
-        "ann_opq_topk" -> operators.Ann.opqTopKFrom(e, isQuery,
-          opqModelR._1, opqModelR._2, k),
-        "ann_opq_rerank" -> operators.Ann.opqTopKRerank(e, isQuery,
-          opqModelR._1, opqModelR._2, k, refine = 100),
-        "ann_quantized_topk" -> {
-          val maxabs = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
-          val scale = maxabs / lit(127.0)
-          val deq = when(maxabs === lit(0.0),
-              transform(col("embedding"), _ => lit(0.0)))
-            .otherwise(transform(col("embedding"),
-              x => floor(x.cast("double") / scale + lit(0.5)) * scale))
-          operators.Ann.bruteForceTopK(
-            Tables.embeddings(spark, sfDir).select(col("vec_id"), deq.as("embedding")),
-            isQuery, k)
-        }
-      ).map { case (n, approx) => n -> operators.Ann.recallAtK(exact, approx) }
-      exact.unpersist()
-      spark.catalog.clearCache()
-      // recall GATES ([[Bench.RecallFloors]]): each serving operating
-      // point must hold its floor or the run FAILS. Why each floor:
-      // ann_ivf_pq 0.2 — the untouched API default must not regress to
-      // the max-compression floor (r10 shipped 0.04); the two rerank
-      // points 0.5 — refinement's one job is repairing quantized recall;
-      // ann_pq_rerank/ann_opq_rerank 0.85 and ann_quantized_topk 0.90 —
-      // these held 0.91/0.92/0.97 ungated for rounds, and a regression
-      // there would still have committed a "clean" record.
-      Bench.recallFloorBreaches(out.toMap).foreach { case (name, r, floor) =>
-        noteFail(s"${name}_recall_gate",
-          f"recall@10 $r%.2f < floor $floor%.2f at this operating point")
-      }
-      out
-    } catch { case e: Throwable =>
-      noteFail("recall", s"harness: ${e.getMessage}")
-      Seq.empty
-    } finally Bench.sweepTmpDirs("bench_ivfpq_recall")
-    // quantizer-balance audit: max/mean cell population of the TRAINED
-    // IVF quantizer (default K ~ sqrt(n)) on the uniform corpus and on a
-    // mass-duplicated one (a third of the vectors collapse to one
-    // embedding). Probe cost is proportional to the hottest cell, so a
-    // lopsided quantizer is a 100x risk the latency lines can't see at
-    // test scale; the skewed twin shows the duplicate mass concentrating
-    // into its own cell(s) instead of silently bloating every probe.
-    val cellBalance: Seq[(String, Double)] = if (
-      only.exists(s => !s.exists(_.startsWith("ann_")))) Seq.empty else try {
-      val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
-      // balanceFactor mirrors the `ivf` SECTION default (balanced
-      // auto-split at 3.0 since r14); 0.0 times the raw trainer — the
-      // `skewed_raw` line keeps the unbalanced number visible so the
-      // split's effect stays measured, not assumed
-      def balance(df: org.apache.spark.sql.DataFrame,
-                  balanceFactor: Double): Double = {
-        val r = operators.Ann.ivfCellCounts(df, balanceFactor = balanceFactor)
-          .agg(max(col("n")).cast("double"), avg(col("n"))).head()
-        val b = r.getDouble(0) / r.getDouble(1)
-        spark.catalog.clearCache()
-        b
-      }
-      // the BALANCED index's straggler bound: max scan UNIT (post split
-      // + salt) over mean cell population. Splitting fixes separable hot
-      // cells; salting bounds the mass-duplicate cell 2-means cannot
-      // separate. This line is GATED, not just reported: past the
-      // threshold the bench FAILS (lands in `failed`), because a unit 10×
-      // the mean is an executor straggler/OOM at 100 TB no latency line
-      // at test scale can see.
-      def unitBalance(df: org.apache.spark.sql.DataFrame): Double = {
-        val units = operators.Ann.ivfScanUnitCounts(df, balanceFactor = 3.0)
-        val r = units.agg(max(col("n")).cast("double"),
-          (sum(col("n")) / countDistinct(col("cell"))).cast("double")).head()
-        val b = r.getDouble(0) / r.getDouble(1)
-        spark.catalog.clearCache()
-        b
-      }
-      val skew = operators.SkewRehearsal.massDuplicatedEmbeddings(e)
-      val skewBalanced = unitBalance(skew)
-      if (skewBalanced > 3.5) {
-        noteFail("ivf_cell_balance_gate",
-          f"balanced skewed unit ratio $skewBalanced%.2f > 3.5 — the " +
-          "split+salt pass is no longer bounding hot cells")
-      }
-      // `uniform`/`skewed` measure the SECTION-DEFAULT trainer (balanced
-      // auto-split, factor 3.0). NOTE the mass-duplicate cell itself
-      // cannot split (identical vectors are 2-means degenerate — the
-      // trainer freezes it), so the cell-level `skewed` ratio stays high
-      // by construction; `skewed_balanced` is the SCAN-UNIT ratio after
-      // the salt pass — the actual straggler bound, and the gated line.
-      Seq("uniform" -> balance(e, 3.0), "skewed" -> balance(skew, 3.0),
-        "skewed_raw" -> balance(skew, 0.0),
-        "skewed_balanced" -> skewBalanced)
-    } catch { case e: Throwable =>
-      noteFail("ivf_cell_balance", s"harness: ${e.getMessage}")
-      Seq.empty
-    }
-    // dedup-quality audit: MinHash-LSH pair recall against the EXACT
-    // n-gram Jaccard pairs (same shingles, same threshold — the inverted
-    // index is ground truth). The latency lines can't see a recall
-    // collapse from a bad band/slot config; this line can.
-    val dedupRecall: Option[Double] = if (
-      only.exists(s => !s.contains("dd_minhash_lsh"))) scala.None else try {
-      val docs = Tables.documents(spark, sfDir)
-      val exact = operators.NearDup.ngramJaccardPairs(docs)
-        .select(col("a_id"), col("b_id"))
-      val approx = operators.NearDup.pairs(docs)
-        .select(col("a_id"), col("b_id"))
-      val denom = exact.count()
-      val hit = exact.join(approx, Seq("a_id", "b_id")).count()
-      spark.catalog.clearCache()
-      Some(if (denom == 0) 1.0 else hit.toDouble / denom)
-    } catch { case e: Throwable =>
-      noteFail("dedup_recall", s"harness: ${e.getMessage}")
-      scala.None
-    }
-    val qs = results.map { case (k, med, _) => "\"" + k + f"""\":$med%.3f""" }
-      .mkString("{", ",", "}")
-    val mins = results.map { case (k, _, mn) => "\"" + k + f"""\":$mn%.3f""" }
-      .mkString("{", ",", "}")
-    val rc = recall.map { case (k, r) => "\"" + k + f"""\":$r%.4f""" }
-      .mkString("{", ",", "}")
-    val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val cb = cellBalance.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val dr = dedupRecall.map(v => f""","dedup_pair_recall":$v%.4f""").getOrElse("")
-    val cn = canaryResults.map { case (k, med, _) => "\"" + k + f"""\":$med%.3f""" }
-      .mkString("{", ",", "}")
-    val sr = scaleRatio.map { case (k, v) => "\"" + k + f"""\":$v%.2f""" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // a bench run owns exactly two java processes (sbt + this forked JVM);
-    // any third is another workload stealing the 32 cores — r8's official
-    // record carried phantom 2-3x regressions from exactly that
-    // Contention gate considers BOTH signals: extra java JVMs AND the box's
-    // 1-minute loadavg at run start. Round 9's official record started at
-    // loadavg 8.24 with contended=false because only java_procs was checked
-    // — non-java load (driver python, compaction) skews timings just as much.
-    val loadavg1m: Double =
-      try loadavgStart.split(",").headOption.map(_.toDouble).getOrElse(0.0)
-      catch { case _: Throwable => 0.0 }
-    // threshold scales with the core count (r21 VERDICT #8: the flat 2.0
-    // tagged the driver's clean 0-shed run on a 32-core box at loadavg 2.33)
-    val contentionWhy = Bench.contentionTriggers(javaProcs, loadavg1m, cpusInt)
-    val contended = contentionWhy.nonEmpty
-    val hostDelta = Bench.hostDeltas(hostStart, Bench.hostCounters())
-    val hostJson = hostDelta.toSeq.sortBy(_._1)
-      .map { case (k, v) => Bench.jstr(k) + f""":$v%.4f""" }
-      .mkString("{", ",", "}")
-    val shedJson = shedLines.map(Bench.jstr).mkString("[", ",", "]")
-    val echoJson = canaryEchoRatio
-      .map(r => f""","canary_echo_ratio":$r%.2f""").getOrElse("")
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","iters":$iters,"git":${Bench.jstr(gitSha)},"budget_sec":$budgetSec%.0f,"shed":$shedJson$echoJson,"host":$hostJson,"loadavg_start":"$loadavgStart","java_procs":$javaProcs,"contended":$contended,"canary":$cn,"scale_ratio":$sr,"queries":$qs,"queries_min":$mins,"recall_at_10":$rc$dr,"ivf_cell_balance":$cb,"failed":$fl,"sf":"$sfDir"}"""
-    // full-line file artifact: the driver's tail-capture truncates long
-    // stdout lines from the FRONT, which in r8 cut off exactly the
-    // loadavg/java_procs self-diagnosis fields — the file keeps every field.
-    // RECORD GUARD: bench_last.json is the committed reference record, and
-    // three rounds running the driver's contended runs have tried to
-    // replace a clean one with contention-skewed numbers. A run that is
-    // CONTENDED or PARTIAL (SPARK_GRAFT_BENCH_ONLY) therefore lands in
-    // bench_last_contended.json / bench_last_partial.json instead of
-    // overwriting a clean full record; SPARK_GRAFT_BENCH_FORCE=1 overrides.
-    val recordPath = java.nio.file.Paths.get("bench_last.json")
-    val force = sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1")
-    // HOST-DEGRADATION GUARD (r14): the VM has been observed to turn
-    // ~2.5× slower at loadavg ~0.1 — a clean-by-contention-signals run on
-    // a degraded host would silently replace a genuinely fast record. The
-    // canary block (fixed queries, timed FIRST) is cross-run comparable:
-    // if this run's canary medians are >1.4× the committed record's
-    // (median of per-line ratios — robust to one noisy line), route to
-    // bench_last_degraded.json instead.
-    // Two comparisons against the committed record, either of which blocks
-    // the write above 1.4×: the light-line canary median (host-wide
-    // slowdown) and the top-10 heaviest queries_min lines (drift
-    // concentrated in shuffle/JIT-heavy work that the light canary
-    // provably misses — r14 shipped a "clean" record whose heavy lines ran
-    // 1.5-3× slow behind a 1.07× canary).
-    val (degradedVsRecord, anchorVsRecord, midTailVsRecord, totalVsRecord)
-        : (Option[(String, Double)], Option[Double], Seq[(String, Double)],
-           Option[Double]) =
-      if (force || only.isDefined || contended ||
-          !java.nio.file.Files.exists(recordPath))
-        (scala.None, scala.None, Seq.empty, scala.None)
-      else try {
-        import scala.jdk.CollectionConverters._
-        val root = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(new String(java.nio.file.Files.readAllBytes(recordPath),
-            "UTF-8"))
-        def block(field: String): Map[String, Double] =
-          root.path(field).properties().asScala
-            .map(e => e.getKey -> e.getValue.asDouble()).toMap
-        val curCanary = canaryResults.map { case (k, med, _) => k -> med }.toMap
-        // shed lines (1-iter samples taken AFTER the budget crossed —
-        // i.e. inside the slow part of a degraded window, reading
-        // ~1.5-2x high from un-amortized JIT alone) are excluded from
-        // every record-guard comparison: they are visible in the `shed`
-        // field but must not false-trigger regression detection
-        val curMins = results.collect {
-          case (k, _, mn) if !shedLines.contains(k) => k -> mn }.toMap
-        val canaryRatio = Bench.canaryDegradation(block("canary"), curCanary)
-          .filter(_ > 1.4).map("canary" -> _)
-        val heavyRatio = Bench.heavyLineDegradation(block("queries_min"),
-          curMins).filter(_ > 1.4).map("heavy-line" -> _)
-        // ANCHOR check on the refresh itself ([[Bench.anchorShift]]): a
-        // run inside the 1.4× degradation band but outside ±1.15× of the
-        // outgoing record's canary would re-anchor every future
-        // degradation comparison — route it aside instead of letting it
-        // become the new baseline
-        (canaryRatio.orElse(heavyRatio),
-          Bench.anchorShift(block("canary"), curCanary),
-          // MID-TAIL check ([[Bench.midTailRegressions]]): individual
-          // multi-second lines past 2× the record even when every median
-          // sits clean — the r17 blind spot
-          Bench.midTailRegressions(block("queries_min"), curMins),
-          // SHARED-TOTAL check ([[Bench.sharedTotalShift]]): the summed
-          // shared-line medians vs the record's — the r18 in-run-drift
-          // seam (every per-family guard under threshold at once while
-          // the headline total moved 1.39×). Shed lines excluded like
-          // the min-based guards above.
-          Bench.sharedTotalShift(block("queries"),
-            results.collect {
-              case (k, med, _) if !shedLines.contains(k) => k -> med }.toMap))
-      } catch { case _: Throwable =>
-        (scala.None, scala.None, Seq.empty, scala.None) }
-    val target =
-      if (force) recordPath
-      else if (only.isDefined) java.nio.file.Paths.get("bench_last_partial.json")
-      else if (failed.nonEmpty) {
-        // a run with failed lines is a PARTIAL record even when every
-        // contention/degradation signal is clean: its total undercounts
-        // the missing work and its gate blocks may be empty — r15
-        // committed exactly such a run (39 failures, empty recall /
-        // cell-balance / scale blocks) over the clean baseline
-        System.err.println(s"[bench] ${failed.size} failed line(s) " +
-          s"(${failed.take(5).mkString(", ")}${if (failed.size > 5) ", …" else ""}) " +
-          "— writing bench_last_failed.json, leaving bench_last.json " +
-          "alone (SPARK_GRAFT_BENCH_FORCE=1 to override)")
-        java.nio.file.Paths.get("bench_last_failed.json")
-      }
-      else if (degradedVsRecord.isDefined) {
-        val (which, ratio) = degradedVsRecord.get
-        System.err.println(f"[bench] $which%s median $ratio%.2fx " +
-          "slower than the committed record at comparable load — host " +
-          "degradation; writing bench_last_degraded.json, leaving " +
-          "bench_last.json alone (SPARK_GRAFT_BENCH_FORCE=1 to override)")
-        java.nio.file.Paths.get("bench_last_degraded.json")
-      }
-      else if (anchorVsRecord.isDefined) {
-        System.err.println(f"[bench] canary median ${anchorVsRecord.get}%.2fx " +
-          "the committed record's — outside the ±1.15x anchor band for a " +
-          "record refresh; writing bench_last_anchor.json, leaving " +
-          "bench_last.json alone (a legitimate step change re-anchors " +
-          "explicitly via SPARK_GRAFT_BENCH_FORCE=1)")
-        java.nio.file.Paths.get("bench_last_anchor.json")
-      }
-      else if (midTailVsRecord.nonEmpty) {
-        val worst = midTailVsRecord.take(8)
-          .map { case (k, r) => f"$k $r%.2fx" }.mkString(", ")
-        System.err.println(s"[bench] ${midTailVsRecord.size} multi-second " +
-          s"line(s) past 2x the committed record ($worst) behind clean " +
-          "medians — writing bench_last_regressed.json, leaving " +
-          "bench_last.json alone (a deliberate algorithmic change " +
-          "re-anchors explicitly via SPARK_GRAFT_BENCH_FORCE=1)")
-        java.nio.file.Paths.get("bench_last_regressed.json")
-      }
-      else if (totalVsRecord.isDefined) {
-        System.err.println(f"[bench] shared-line total ${totalVsRecord.get}%.2fx " +
-          "the committed record's — outside the ±1.15x band behind clean " +
-          "per-family medians (the in-run-drift profile); writing " +
-          "bench_last_drifted.json, leaving bench_last.json alone " +
-          "(a legitimate step change re-anchors explicitly via " +
-          "SPARK_GRAFT_BENCH_FORCE=1)")
-        java.nio.file.Paths.get("bench_last_drifted.json")
-      }
-      else if (contended) {
-        // unconditional, not "only when the existing record is clean":
-        // in a fresh workspace (no record) or after a contended record
-        // landed once, a contended run would otherwise still CREATE the
-        // canonical file with contention-skewed numbers — the record
-        // path holds clean full runs only
-        System.err.println("[bench] contended run — writing " +
-          "bench_last_contended.json, leaving bench_last.json alone " +
-          "(set SPARK_GRAFT_BENCH_FORCE=1 to override)")
-        java.nio.file.Paths.get("bench_last_contended.json")
-      } else recordPath
-    try java.nio.file.Files.write(target, (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $target: ${e.getMessage}") }
-    def jstr(s: String): String = Bench.jstr(s)
-    // guard-decision artifact for the ops surface (SpecPushServer's
-    // GET /bench/guard): which route this run took and WHY — the stderr
-    // diagnosis above is lost to tail-capture, and "why didn't the
-    // record refresh?" should be answerable from the console
-    locally {
-      val (routeName, reason): (String, String) =
-        if (force) ("forced", "SPARK_GRAFT_BENCH_FORCE=1 overrides every guard")
-        else if (only.isDefined)
-          ("partial", s"SPARK_GRAFT_BENCH_ONLY=${only.get.mkString(",")}")
-        else if (failed.nonEmpty)
-          ("failed", s"${failed.size} failed line(s): " +
-            failed.take(5).mkString(", ") + (if (failed.size > 5) ", …" else ""))
-        else if (degradedVsRecord.isDefined) {
-          val (which, ratio) = degradedVsRecord.get
-          ("degraded", f"$which median $ratio%.2fx slower than the " +
-            "committed record at comparable load")
-        }
-        else if (anchorVsRecord.isDefined)
-          ("anchor", f"canary median ${anchorVsRecord.get}%.2fx the " +
-            "committed record's — outside the ±1.15x refresh band")
-        else if (midTailVsRecord.nonEmpty)
-          ("regressed", s"${midTailVsRecord.size} multi-second line(s) " +
-            "past 2x the record: " + midTailVsRecord.take(8)
-              .map { case (k, r) => f"$k $r%.2fx" }.mkString(", "))
-        else if (totalVsRecord.isDefined)
-          ("drifted", f"shared-line total ${totalVsRecord.get}%.2fx the " +
-            "committed record's — outside the ±1.15x band behind clean " +
-            "per-family medians (in-run drift)")
-        else if (contended)
-          ("contended", s"java_procs=$javaProcs loadavg_start=$loadavgStart")
-        else ("clean", "full run, all guards green — record refreshed")
-      val guard = s"""{"route":${jstr(routeName)},"reason":${jstr(reason)},""" +
-        s""""target":${jstr(target.toString)},""" +
-        s""""written_at_epoch_ms":${System.currentTimeMillis()},""" +
-        s""""contended":$contended,"failed_count":${failed.size},""" +
-        s""""git":${jstr(gitSha)},"host":$hostJson,""" +
-        s""""shed":$shedJson$echoJson,""" +
-        f""""total_sec":$total%.3f,"sf":${jstr(sfDir)}}"""
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_guard.json"),
-        (guard + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write bench_guard.json: ${e.getMessage}") }
-    }
-    // diagnosis artifact: stderr is routinely lost by the driver's
-    // tail-capture, so the per-line failure messages also land in a file
-    if (failedMsgs.nonEmpty) {
-      val msgs = failedMsgs
-        .map { case (k, v) => jstr(k) + ":" + jstr(v) }
-        .mkString("{", ",", "}")
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_failed_msgs.json"),
-        (msgs + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write bench_failed_msgs.json: ${e.getMessage}") }
-    }
-    // EMISSION ORDER (r22, VERDICT #1): the compact bench_env summary
-    // prints FIRST, the FULL record JSON — the line carrying the
-    // `queries`/`queries_min` maps the driver's PERF comparison needs —
-    // prints LAST. r21 proved the driver parses the FINAL stdout line
-    // (first non-null parse in seven rounds once the sbt [info] prefix
-    // died), but the parsed line was the counts-only summary, so
-    // PERF_r21.json had per_query: {} and the whole round's perf story
-    // was invisible to the driver. The full line is also kept in the
-    // bench_last*.json file artifact, bench_guard.json and the per-line
-    // bench_progress.jsonl, so a front-truncated stored tail loses
-    // nothing that isn't committed.
-    val mbStart = hostDelta.get("membw_gbps_start")
-      .map(v => f""","membw_start":$v%.2f""").getOrElse("")
-    val mbEnd = hostDelta.get("membw_gbps_end")
-      .map(v => f""","membw_end":$v%.2f""").getOrElse("")
-    println(f"""{"metric":"bench_env","total":$total%.3f,"unit":"sec","git":${Bench.jstr(gitSha.take(8))},"contended":$contended,"failed_count":${failed.size},"shed_count":${shedLines.size}$echoJson$mbStart$mbEnd,"loadavg_start":"$loadavgStart","java_procs":$javaProcs,"sf":"$sfDir"}""")
-    if (contended) System.err.println("[bench] WARNING: contention-suspect " +
-      "window (" + contentionWhy.mkString("; ") +
-      ") — the record line is tagged \"contended\":true")
-    println(line)
-    System.out.flush()
-    spark.stop()
   }
 }

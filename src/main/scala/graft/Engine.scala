@@ -4,85 +4,45 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's recommended configuration — the one
   * place that encodes local-vs-cluster knobs so every entry point (CLI,
-  * Verify, Bench, user code) starts from the same baseline. */
+  * Verify, the benchmark, user code) starts from the same baseline. */
 object Engine {
 
-  /** Shuffled-hash-join enablement (r21, guide §3.1): Spark prefers
-    * sort-merge by default; allowing the planner to pick SHJ when a
-    * build side fits, and letting AQE convert an SMJ to SHJ at runtime
-    * when every post-shuffle build partition is under the threshold,
-    * removes the per-partition sorts from equi-join chains. Measured on
-    * the declared surface at sf0.1 (min of 3, same JVM A/B):
-    * dd_semdedup 0.51-0.93x, dd_dedup_corpus 0.65x, dd_semdedup_two
-    * 0.74x, dd_pagerank 0.91x, q3/q5/q18/cp_bm25 0.91-0.94x, nothing
-    * past noise in the other direction except full-outer joins (pinned
-    * to MERGE at the query). Scale posture: the threshold bounds the
-    * BUILD side per post-shuffle partition — with AQE advisory
-    * partitions at 64-256 MB a 128m build fits executor memory with
-    * room; on a memory-tight cluster set SPARK_GRAFT_SHJ_THRESHOLD=0 to
-    * restore sort-merge everywhere (spill-graceful), or size it to the
-    * per-task memory you can spare. */
-  def shjThreshold: Option[String] =
-    shjThresholdFrom(sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "128m"))
-
-  /** Any off-ish or unparseable value fully disables BOTH knobs (r21
-    * ADVICE: "0m"/"off" used to half-apply — preferSortMergeJoin went
-    * false while the AQE threshold became 0/garbage); only a value Spark
-    * itself can read as a positive byte count enables SHJ. */
-  private[graft] def shjThresholdFrom(raw0: String): Option[String] = {
-    val raw = raw0.trim
-    val bytes: Long =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-      catch { case _: Throwable => 0L }
-    Some(raw).filter(_ => bytes > 0L)
-  }
-
-  /** Parquet write codec (r22, guide §6): zstd — smaller files at similar
-    * read speed. A/B on the store-writing lines (same JVM, min of 3,
-    * alternating): sf1 twin dd_dedup_index 0.83×, cp_assembly_staged
-    * 0.93×, ann_ivf_pq_disk 0.96×, ann_ivf_disk 0.98×; sf0.1
-    * 0.85–0.94× on a clean window — the write-CPU premium is already
-    * paid back by read/shuffle-bytes savings at bench scale, and the
-    * gap widens with store size. Codec choice is results-neutral (the
-    * oracle compares rows). Override with SPARK_GRAFT_PARQUET_CODEC
-    * (any Spark codec name; empty keeps Spark's own default). */
-  def parquetCodec: Option[String] =
-    parquetCodecFrom(sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "zstd"))
-
-  private[graft] def parquetCodecFrom(raw: String): Option[String] =
-    Some(raw.trim).filter(_.nonEmpty)
-
-  /** Apply the engine's measured tuning (join strategy + I/O codec) to a
-    * session builder — shared by this factory and the Bench/Verify mains,
-    * which build their own sessions to honor the driver contract's
-    * master/partitions exactly. */
-  def applyTuning(b: SparkSession.Builder): SparkSession.Builder = {
-    parquetCodec.foreach { c =>
-      b.config("spark.sql.parquet.compression.codec", c)
-    }
-    applyJoinStrategy(b)
-  }
-
-  /** Join-strategy knobs only — see [[applyTuning]], which supersedes
-    * this as the mains' entry point. */
-  def applyJoinStrategy(b: SparkSession.Builder): SparkSession.Builder = {
-    shjThreshold.foreach { t =>
-      b.config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", t)
-    }
-    b
-  }
+  /** The measured tuning [[session]] applies on top of Spark's defaults.
+    * All three are runtime SQL confs: `spark.conf.set` overrides them on a
+    * live session. */
+  private[graft] val tuning: Map[String, String] = Map(
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "128m",
+    "spark.sql.parquet.compression.codec" -> "zstd")
 
   /** Build a session. `master` defaults to `SPARK_MASTER` env or
     * local[SPARK_GRAFT_CPUS]; on a real cluster pass the cluster master (or
     * rely on spark-submit) — shuffle partitions should then be sized to
     * roughly 2-3× total executor cores, which callers can override via
-    * `shufflePartitions`. */
+    * `shufflePartitions`.
+    *
+    * Joins: Spark prefers sort-merge by default; this session lets the
+    * planner pick a shuffled-hash join when a build side fits, and lets
+    * AQE convert a sort-merge join to a shuffled-hash join when every
+    * post-shuffle build partition is under 128 MB. That removes the
+    * per-partition sorts from equi-join chains (0.5-0.94× on the
+    * join-heavy queries at sf0.1; full-outer joins are pinned to
+    * sort-merge at the query). The threshold bounds the build side per
+    * post-shuffle partition; on a memory-tight cluster restore sort-merge
+    * joins everywhere (spill-graceful) at runtime with
+    * {{{
+    * spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
+    * spark.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
+    * }}}
+    *
+    * Parquet writes default to zstd: smaller files at similar read speed
+    * (0.83-0.98× on the store-writing queries); results are codec-neutral.
+    * Override per session with `spark.sql.parquet.compression.codec`. */
   def session(appName: String = "graft",
               shufflePartitions: Option[Int] = None): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = shufflePartitions.map(_.toString).getOrElse(cpus)
-    val s = applyTuning(SparkSession.builder()
+    val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName(appName)
       .withExtensions(new GraftExtensions) // custom planner strategies at build
@@ -91,7 +51,8 @@ object Engine {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
+      .config("spark.ui.enabled", "false")
+      .config(tuning)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.{Orchestrator, PipelineSpec, SpecDirWatcher}
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -20,7 +19,7 @@ object Main {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "run" :: files if files.nonEmpty =>
-      val spark = session()
+      val spark = Engine.session()
       try {
         val orch = new Orchestrator(spark)
         val specs = files.map(f => PipelineSpec.fromJson(readFile(Paths.get(f))))
@@ -29,7 +28,7 @@ object Main {
       } finally spark.stop()
 
     case "reconcile" :: dir :: Nil =>
-      val spark = session()
+      val spark = Engine.session()
       try {
         val orch = new Orchestrator(spark)
         val specs = Files.list(Paths.get(dir)).iterator().asScala
@@ -45,7 +44,7 @@ object Main {
     // bounds the loop (tests / cron-style supervision); default = forever.
     case "watch" :: dir :: rest if rest.size <= 1 =>
       val intervalMs = rest.headOption.map(_.toLong).getOrElse(5000L)
-      val spark = session()
+      val spark = Engine.session()
       try {
         val watcher = new SpecDirWatcher(new Orchestrator(spark), Paths.get(dir))
         val rounds = sys.env.get("GRAFT_WATCH_ROUNDS").map(_.toInt)
@@ -72,7 +71,7 @@ object Main {
     // private local dir, and the same SpecDirWatcher reconcile loop runs
     // it. `graft serve`'s ws listener (HTTP port + 1) is the other end.
     case "daemon" :: host :: wsPort :: rest if rest.size <= 1 =>
-      val spark = session()
+      val spark = Engine.session()
       try {
         val localDir = rest.headOption.map(Paths.get(_)).getOrElse(
           Files.createTempDirectory("graft_daemon_specs"))
@@ -109,7 +108,7 @@ object Main {
     case "serve" :: dir :: rest if rest.size <= 2 =>
       val port = rest.headOption.map(_.toInt).getOrElse(8181)
       val intervalMs = rest.drop(1).headOption.map(_.toLong).getOrElse(5000L)
-      val spark = session()
+      val spark = Engine.session()
       val orch = new Orchestrator(spark)
       // push auth: GRAFT_PUSH_TOKEN gates PUT/POST/DELETE (reference
       // daemons join the control plane with tokens); unset = open
@@ -164,23 +163,10 @@ object Main {
           println(f"$name%-32s ${e.io.input}%-16s -> ${e.io.output}")
         }
 
-    // the measured ANN recall ladder from the last bench record, mapped
-    // to the ann_topk section configs that reproduce each line — so a
-    // spec author picks a variant's quality/cost operating point from
-    // numbers, not blind
-    case "sections" :: "--recall" :: rest if rest.size <= 1 =>
-      val path = Paths.get(rest.headOption.getOrElse("bench_last.json"))
-      if (!Files.exists(path)) {
-        System.err.println(s"no bench record at $path — run graft.Bench " +
-          "first (or pass the record path)")
-        sys.exit(2)
-      }
-      println(graft.plans.RecallReport.render(readFile(path)))
-
     // plan inspection: print a registered query's physical plan against
     // a testdata dir — the .explain("formatted") loop made a command
     case "explain" :: name :: rest if rest.size <= 1 =>
-      val spark = session()
+      val spark = Engine.session()
       try {
         val dir = rest.headOption.getOrElse("/root/testdata/sf0.001")
         val q = graft.Queries.all.toMap.getOrElse(name,
@@ -192,7 +178,7 @@ object Main {
 
     // lake maintenance: small-file compaction (atomic, row-count-guarded)
     case "compact" :: path :: rest if rest.size <= 1 =>
-      val spark = session()
+      val spark = Engine.session()
       try {
         val target = rest.headOption.map(_.toInt).getOrElse(128)
         val (before, after, rows) =
@@ -202,7 +188,7 @@ object Main {
 
     // lake maintenance: Z-order rewrite for multi-column file pruning
     case "zorder" :: inPath :: outPath :: cols :: files :: Nil =>
-      val spark = session()
+      val spark = Engine.session()
       try {
         graft.sources.Layout.zorderParquet(spark.read.parquet(inPath),
           outPath, cols.split(",").map(_.trim).toSeq, files.toInt)
@@ -212,7 +198,7 @@ object Main {
     // one-shot physical replication catch-up: db(s) -> replica dir,
     // cursor persisted under stateDir (re-run to ship only changes)
     case "replicate" :: db :: replicaDir :: rest if rest.size <= 1 =>
-      val spark = session()
+      val spark = Engine.session()
       try {
         val store = new graft.plans.StateStore(
           rest.headOption.getOrElse(s"$replicaDir/.graft_state"))
@@ -229,7 +215,7 @@ object Main {
     case "tokenize" :: docsPath :: outDir :: rest if rest.size <= 2 =>
       val tokenizer = rest.headOption.getOrElse("unigram")
       val vocabSize = rest.drop(1).headOption.map(_.toInt).getOrElse(200)
-      val spark = session()
+      val spark = Engine.session()
       try {
         val docs = spark.read.parquet(docsPath)
         tokenizer match {
@@ -259,7 +245,7 @@ object Main {
       System.err.println("usage: graft run <spec.json>... | reconcile <dir> | " +
         "watch <dir> [intervalMs] | serve <dir> [port] [intervalMs] | " +
         "daemon <host> <wsPort> [localDir] | " +
-        "validate <spec.json> | show <spec.json> | sections [--recall [record]] | " +
+        "validate <spec.json> | show <spec.json> | sections | " +
         "explain <query> [sfDir] | " +
         "compact <path> [targetMB] | zorder <in> <out> <cols> <files> | " +
         "replicate <dbGlob> <replicaDir> [stateDir] | " +
@@ -269,18 +255,4 @@ object Main {
 
   private def readFile(p: Path): String =
     new String(Files.readAllBytes(p), "UTF-8")
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = Engine.applyTuning(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

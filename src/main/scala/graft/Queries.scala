@@ -36,7 +36,7 @@ object Queries {
     * for recursive deletion at JVM exit — query results are LAZY frames
     * that may read the dir until the caller's last action, so the earliest
     * universally-safe deletion point is process end. Without this,
-    * repeated Verify/Bench runs accumulated corpus-sized garbage in /tmp.
+    * repeated Verify runs accumulated corpus-sized garbage in /tmp.
     * Deletion walks without following symlinks (sentinel staging links the
     * source parquet — the link dies, the data does not). */
   private val scratchDirs =
@@ -603,7 +603,7 @@ object Queries {
       val c = Tables.customer(s, dir)
         .filter($"c_mktsegment" === "MACHINERY").select($"c_custkey", $"c_name")
       // MERGE hint (r21): with shuffled-hash enablement on
-      // ([[Engine.applyJoinStrategy]]), AQE converts this full-outer
+      // ([[Engine.session]]), AQE converts this full-outer
       // join to SHJ whose single-side build + row-marking measured
       // 1.1-1.2x SLOWER than sort-merge here — full outer is the one
       // join type where SMJ's streamed both-sides shape wins, so pin it
@@ -5642,7 +5642,7 @@ object Queries {
 
   // -------------------------------------------------------------- registry
 
-  /** Insertion-ordered so Verify/Bench output is stable. */
+  /** Insertion-ordered so Verify output is stable. */
   val all: Seq[(String, Q)] = Seq(
     "q1_pricing_summary" -> q1,
     "q2_top_orders" -> q2,

@@ -789,8 +789,7 @@ object Ann {
   /** [[trainCentroids]] followed by HOT-CELL SPLITTING — the quantizer
     * balance pass. A lopsided quantizer is a 100 TB probe-cost skew:
     * every query probing the hot cell scans `max/mean` times the average
-    * cell, and the bench's `ivf_cell_balance` line measures exactly that
-    * ratio. After Lloyd converges, any cell whose population exceeds
+    * cell, and [[ivfCellCounts]] measures exactly that ratio. After Lloyd converges, any cell whose population exceeds
     * `balanceFactor ×` the mean is split by seeded 2-means over ITS OWN
     * members (all hot cells split together — one assignment pass per
     * round, not per cell), replacing the hot centroid with its two
@@ -798,7 +797,7 @@ object Ann {
     *
     * A cell of exact-identical vectors cannot balance by splitting (both
     * children coincide); such degenerate cells are detected (a child ends
-    * up empty) and FROZEN — reported via the bench's balance line rather
+    * up empty) and FROZEN — left visible in [[ivfCellCounts]] rather
     * than looping forever. Mass-duplicate corpora should exact-collapse
     * first (see [[semanticDedup]]); the quantizer keeps their duplicates
     * in one cell, which is the best an assignment-complete index can do.
@@ -1024,11 +1023,11 @@ object Ann {
         balanceFactor, maxTrainVectors = maxTrainVectors), k, nProbe)
 
   /** Vector→cell populations of a trained quantizer over the full corpus:
-    * `(cell, n)` — the bench derives the max/mean imbalance from this (a
+    * `(cell, n)`, whose max/mean is the quantizer's imbalance (a
     * lopsided quantizer makes probe cost skew even when wall time at
     * test scale looks fine). `balanceFactor > 0` routes training through
-    * [[trainCentroidsBalanced]] so the bench can audit (and gate) the
-    * balanced path against the raw one. */
+    * [[trainCentroidsBalanced]], so the balanced path can be compared
+    * against the raw one. */
   def ivfCellCounts(corpus: DataFrame, kCentroids: Int = 0, iters: Int = 5,
                     seed: String = "ivf", sampleRate: Double = 1.0,
                     balanceFactor: Double = 0.0,
@@ -1051,7 +1050,7 @@ object Ann {
     * distinct vec_ids, so the salt spreads exactly the mass that
     * splitting cannot. The unit is what a task scans — partition dirs on
     * disk, shuffle partitions in memory — so max(unit)/mean(cell) is the
-    * straggler bound the bench GATES on. Probe COST is unchanged (a
+    * straggler bound `AnnQualityGatesSpec` gates on. Probe COST is unchanged (a
     * probed cell's salts are all read); what the salt buys is that no
     * single task or partition is 10× the others at 100 TB. */
   def ivfScanUnitCounts(corpus: DataFrame, kCentroids: Int = 0,
@@ -2264,7 +2263,7 @@ object Ann {
   /** [[ivfPqTopKFrom]] widened to `refine` candidates, then
     * [[exactRerank]]ed to k — the `IVFx,PQy,RFlat` serving shape.
     * Measured on the bench corpus: recall@10 0.21 (`ann_ivf_pq`) →
-    * the refined point's recall is gated in the bench
+    * the refined point's recall is gated in `AnnQualityGatesSpec`
     * (`ann_ivf_pq_rerank`). */
   def ivfPqTopKRerank(corpus: DataFrame, isQuery: Column,
                       cents: Array[Array[Double]],

@@ -1,23 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{VectorFunctions => VF}
-
-/** Deterministic worst-case corpora for the capped pair generators —
-  * the scale rehearsal the bench runs next to the uniform queries
-  * (VERDICT r3 ask #9).
+/** Deterministic worst-case corpora for the capped pair generators and
+  * the IVF quantizer.
   *
   * A 100 TB corpus is never uniform: web scrapes carry mass-duplicated
   * boilerplate (one template page repeated millions of times → ONE band
   * bucket holding the whole replica set) and metadata labels collapse
   * (one "en" label over 80% of the corpus → one giant cosine block).
-  * These generators rebuild exactly those shapes from the test tables, so
-  * "the cap machinery keeps the skewed case within ~2× of the uniform
-  * one" is a measured bench line (`skewed_*` vs its uniform twin), not a
-  * spec-sized claim. Everything is derived deterministically from the
-  * input — no RNG, same rows every run.
+  * These generators rebuild exactly those shapes from the test tables.
+  * Everything is derived deterministically from the input — no RNG, same
+  * rows every run.
   */
 object SkewRehearsal {
 
@@ -41,9 +36,8 @@ object SkewRehearsal {
     emb.withColumn("label", lit("hot"))
 
   /** A third of the vectors collapsed to ONE embedding (the min-id row's)
-    * — the mass-duplicate shape shared by the semdedup rehearsal and the
-    * bench's `ivf_cell_balance` skewed twin, defined once so both always
-    * measure the same scenario. */
+    * — the mass-duplicate shape the IVF balance gate
+    * (`AnnQualityGatesSpec`) runs the quantizer against. */
   def massDuplicatedEmbeddings(e: DataFrame): DataFrame = {
     val tpl = broadcast(e.orderBy(col("vec_id")).limit(1)
       .select(col("embedding").as("_tpl")))
@@ -52,100 +46,4 @@ object SkewRehearsal {
         when(col("vec_id") % 3 === 0, col("_tpl")).otherwise(col("embedding")))
       .drop("_tpl")
   }
-
-  /** The skewed twins of the capped dedup/similarity queries, keyed like
-    * the bench expects. Caps are LOWERED to test-scale numbers so the
-    * guarded path actually executes (at sf0.1 the production caps don't
-    * bite even on the hot corpus — the point is to measure the machinery,
-    * not to pass uniform data through an untouched fast path). */
-  def queries(spark: SparkSession, dir: String): Seq[(String, () => Long)] = Seq(
-    "skewed_dd_minhash_lsh" -> (() =>
-      NearDup.pairs(hotCorpus(graft.Tables.documents(spark, dir)),
-        maxBucket = 200).count()),
-    "skewed_dd_simhash_pairs" -> (() =>
-      NearDup.simhashPairs(hotCorpus(graft.Tables.documents(spark, dir)),
-        maxBucket = 200).count()),
-    "skewed_dd_embed_cosine" -> (() =>
-      Blocking.boundedCosinePairs(
-        hotLabel(graft.Tables.embeddings(spark, dir))
-          .select(col("vec_id"), col("label"), col("embedding"))
-          .withColumn("nrm", VF.norm2(col("embedding"))),
-        maxBlock = 500)
-        .filter(col("cosine") >= 0.35).count()),
-    // mass-duplicated EMBEDDING: a third of the vectors become ONE vector.
-    // Identical vectors agree on every LSH sign bit, so the sub-bucket cap
-    // CANNOT split them — semanticDedup's exact-duplicate pre-collapse is
-    // the guard that keeps this linear (m copies cost O(1) pairs, not
-    // O(m²)); this line measures that guard under the duplicate mass
-    "skewed_dd_semdedup" -> (() =>
-      graft.operators.Ann.semanticDedup(
-        massDuplicatedEmbeddings(graft.Tables.embeddings(spark, dir)
-          .select(col("vec_id"), col("embedding"))),
-        threshold = 0.35, kCentroids = 16, iters = 5, maxBlock = 200).count()),
-    // mass-duplicated boilerplate: a third of the corpus becomes ONE
-    // template, so that template's segments hit df = n/3 — the broadcast
-    // anti-join must stay tiny (O(#boilerplate templates)), never a
-    // shuffle of the corpus against a huge removal list
-    "skewed_cp_segment_dedup" -> (() =>
-      Corpus.segmentDedup(hotCorpus(graft.Tables.documents(spark, dir)),
-        segWords = 8, maxDf = 2).count()),
-    // a third of the corpus is ONE template: every L-gram of the template
-    // becomes a globally-hot hash whose mark-back join lands n/3 rows on
-    // single keys — the AQE skew-split worst case for ExactSubstr
-    "skewed_dd_exact_substr" -> (() =>
-      Corpus.exactSubstrDedup(hotCorpus(graft.Tables.documents(spark, dir)),
-        minTokens = 10).count()),
-    // mass-duplicated REFERENCE corpus: every third reference doc is the
-    // same template, so its band buckets would hold n/3 members — the
-    // exact-text pre-dedup inside dedupAgainstReference must collapse
-    // them to ONE representative before the band join (candidates stay
-    // O(n_incoming), never O(n_incoming · n_replicas))
-    "skewed_dd_ref_dedup" -> (() => {
-      val docs = hotCorpus(graft.Tables.documents(spark, dir))
-      NearDup.dedupAgainstReference(
-        docs.filter(col("doc_id") % 3 === 0),
-        docs.filter(col("doc_id") % 3 =!= 0)).count()
-    }),
-    // mass-duplicated boilerplate through the bigram LM: the template's
-    // bigrams become globally-hot (prev, w) keys carrying n/3 of the
-    // scoring stream each. Both count aggregates absorb the mass in
-    // map-side partials, and the scoring join is one hot STREAM side
-    // against a one-row-per-key table — AQE's skew-split territory, never
-    // a cross product. This line measures that the LM's cost stays ~flat
-    // under the duplicate mass instead of collapsing onto one task
-    "skewed_ta_bigram_score" -> (() =>
-      Corpus.bigramLmScore(hotCorpus(graft.Tables.documents(spark, dir)),
-        vocabSize = 16).count()),
-    // mass-duplicated docs turn the near-dup graph into one giant clique
-    // (star-compressed to hub edges by the capped candidate generator):
-    // the PageRank contribution stream then carries n/3 rows keyed by the
-    // SAME hub dst — the partial+final inflow sum must absorb the hot key
-    // map-side instead of piling one task. Measures iteration cost under
-    // a mega-hub, the shape a boilerplate cluster produces at 100 TB
-    "skewed_dd_pagerank" -> (() => {
-      val docs = hotCorpus(graft.Tables.documents(spark, dir))
-      Clustering.pageRank(
-        docs.select(col("doc_id").as("id")),
-        NearDup.pairs(docs).select(col("a_id"), col("b_id")),
-        iters = 5).count()
-    }),
-    // the hot template's shingles blow past the posting cap → excluded
-    // from candidate generation but counted exactly in the verify sets;
-    // directed containment doubles the output of every surviving pair
-    "skewed_dd_containment" -> (() =>
-      NearDup.ngramContainmentPairs(
-        hotCorpus(graft.Tables.documents(spark, dir)),
-        threshold = 0.5, maxPosting = 64).count()),
-    // novelty under a HOT GRAM: a third of the corpus is one template →
-    // that template's shingle hashes each occur on n/3 target rows, so
-    // the (h)-keyed reference join carries hot keys — the AQE skew-join
-    // split (sort-merge left join, skewed probe side divisible) is the
-    // machinery this line prices against the uniform dd_novelty twin
-    "skewed_dd_novelty" -> (() => {
-      val hot = hotCorpus(graft.Tables.documents(spark, dir))
-      NearDup.noveltyScores(
-        hot.filter(col("doc_id") % 3 =!= 0),
-        hot.filter(col("doc_id") % 3 === 0)).count()
-    })
-  )
 }

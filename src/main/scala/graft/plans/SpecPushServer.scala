@@ -83,8 +83,7 @@ final class SpecPushServer(dir: Path, port: Int = 0,
                            tls: Option[TlsConfig] = scala.None,
                            control: Option[ControlPlane] = scala.None,
                            onChange: Option[() => Unit] = scala.None,
-                           presence: Option[DaemonPresence] = scala.None,
-                           benchGuardDir: Option[Path] = scala.None) {
+                           presence: Option[DaemonPresence] = scala.None) {
 
   /** Fire the change notification (e.g. [[SpecPushWs]] broadcasting
     * `RefetchGraph`) after a mutation LANDED — never let a listener
@@ -130,42 +129,6 @@ final class SpecPushServer(dir: Path, port: Int = 0,
         case e: Exception => respond(ex, 500, s"error: ${e.getMessage}\n")
       } finally ex.close()
   })
-
-  // ops surface for the bench's record guard: the bench writes its
-  // routing decision (clean/contended/failed/degraded/anchor/partial +
-  // why) to bench_guard.json and any per-line failure messages to
-  // bench_failed_msgs.json — this endpoint puts that next to the
-  // pipeline cause chains so "why didn't the record refresh?" is
-  // answerable from the console instead of the bench host's stderr.
-  // GET /bench/guard → {"decision": <bench_guard.json>,
-  //                     "last_failed_msgs": <bench_failed_msgs.json>|null}
-  benchGuardDir.foreach { bd =>
-    server.createContext("/bench", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        try {
-          if (ex.getRequestMethod != "GET")
-            respond(ex, 405, "method not allowed\n")
-          else {
-            val g = bd.resolve("bench_guard.json")
-            if (!Files.exists(g)) respond(ex, 404, "no bench guard state\n")
-            else {
-              val dec = new String(Files.readAllBytes(g), UTF_8).trim
-              val mp = bd.resolve("bench_failed_msgs.json")
-              // the messages file persists from the LAST failed run even
-              // when the latest decision is clean — labeled accordingly
-              val msgs =
-                if (Files.exists(mp))
-                  new String(Files.readAllBytes(mp), UTF_8).trim
-                else "null"
-              respond(ex, 200,
-                s"""{"decision":$dec,"last_failed_msgs":$msgs}""" + "\n")
-            }
-          }
-        } catch {
-          case e: Exception => respond(ex, 500, s"error: ${e.getMessage}\n")
-        } finally ex.close()
-    })
-  }
 
   /** Port actually bound (use port=0 to let the OS pick — tests). */
   def boundPort: Int = server.getAddress.getPort

@@ -2,319 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench record's host-degradation guard: a clean-by-contention
-  * signals run on a silently slowed host must not overwrite a genuinely
-  * fast committed record (seen live in r14: ~2.5× at loadavg 0.1). */
+/** Host telemetry behind the benchmark's noise flags: the counters and
+  * the memory-bandwidth gauge must read on a Linux host, and the deltas
+  * between two snapshots must say which resource degraded (steal/iowait
+  * fractions, PSI stall deltas) rather than report raw jiffies. */
 class BenchGuardSpec extends AnyFunSuite {
-
-  private def canary(scale: Double): Map[String, Double] =
-    Seq("q1" -> 0.2, "q2" -> 0.1, "q3" -> 0.45, "q4" -> 0.3, "q5" -> 0.8,
-      "q6" -> 0.15).map { case (k, v) => k -> v * scale }.toMap
-
-  test("comparable speed -> ~1.0, no block") {
-    val d = Bench.canaryDegradation(canary(1.0), canary(1.05))
-    assert(d.exists(r => r > 0.9 && r < 1.2))
-  }
-
-  test("2.5x host slowdown -> ratio ~2.5") {
-    val d = Bench.canaryDegradation(canary(1.0), canary(2.5))
-    assert(d.exists(r => r > 2.2 && r < 2.8))
-  }
-
-  test("median is robust to one noisy line") {
-    val cur = canary(1.0) + ("q1" -> 10.0) // one wild outlier
-    val d = Bench.canaryDegradation(canary(1.0), cur)
-    assert(d.exists(_ < 1.4), s"one outlier must not block the record: $d")
-  }
-
-  test("faster run reports < 1") {
-    val d = Bench.canaryDegradation(canary(1.0), canary(0.6))
-    assert(d.exists(_ < 0.8))
-  }
-
-  test("too few shared lines -> None (never block on thin evidence)") {
-    assert(Bench.canaryDegradation(
-      Map("q1" -> 1.0, "q2" -> 1.0), Map("q1" -> 9.0, "q2" -> 9.0)).isEmpty)
-    assert(Bench.canaryDegradation(Map.empty, canary(1.0)).isEmpty)
-  }
-
-  // ---- sf-scale gate statistic: per-side MINS, not medians (r18's
-  // official run FAILED on a contention spike that inflated the
-  // large-side median to 85x over a line whose honest ratio is 3.4)
-
-  test("scale gate: a median spike on the large side passes via min") {
-    // three large-side samples, one clean + two inside a contention
-    // spike: median reads 7.3s (ratio 14.6 — the r18 false FAILURE),
-    // min reads 1.6s (ratio 3.2 — the honest growth)
-    val r = Bench.scaleGateRatio(Seq(7.3, 1.6, 7.5), Seq(0.5, 0.55))
-    assert(r.exists(v => v > 3.0 && v < 3.5), s"expected ~3.2: $r")
-    assert(r.forall(_ <= 12.0), "the spike must not trip the gate")
-  }
-
-  test("scale gate: a real superlinear profile still fails") {
-    // slow on EVERY large-side sample — no min can rescue it
-    val r = Bench.scaleGateRatio(Seq(50.0, 51.0, 52.0), Seq(0.5))
-    assert(r.exists(_ > 12.0), s"superlinear growth must trip the gate: $r")
-  }
-
-  test("scale gate: empty sides -> None (no evidence, no verdict)") {
-    assert(Bench.scaleGateRatio(Seq.empty, Seq(0.5)).isEmpty)
-    assert(Bench.scaleGateRatio(Seq(1.0), Seq.empty).isEmpty)
-  }
-
-  // ---- heavy-line guard: drift concentrated in the heaviest queries_min
-  // lines that the light canary misses (r14: 1.07x canary, 1.5-3x heavy)
-
-  /** 20 lines: 10 heavy (2.0-6.5s) + 10 light (0.05-0.5s). */
-  private def mins(heavyScale: Double, lightScale: Double = 1.0): Map[String, Double] =
-    (1 to 10).map(i => s"heavy_$i" -> (1.5 + 0.5 * i) * heavyScale).toMap ++
-      (1 to 10).map(i => s"light_$i" -> 0.05 * i * lightScale).toMap
-
-  test("heavy lines 2x slow while light lines flat -> blocked") {
-    val d = Bench.heavyLineDegradation(mins(1.0), mins(2.0))
-    assert(d.exists(r => r > 1.8 && r < 2.2), s"expected ~2.0: $d")
-  }
-
-  test("heavy comparison ignores light-line noise") {
-    // light lines 3x slow, heavy flat: the HEAVY guard must not fire
-    // (that case is the canary's job)
-    val d = Bench.heavyLineDegradation(mins(1.0), mins(1.02, lightScale = 3.0))
-    assert(d.exists(_ < 1.2), s"light noise must not trip the heavy guard: $d")
-  }
-
-  test("heavy median robust to one outlier heavy line") {
-    val cur = mins(1.05) + ("heavy_7" -> 60.0)
-    val d = Bench.heavyLineDegradation(mins(1.0), cur)
-    assert(d.exists(_ < 1.4), s"one outlier must not block: $d")
-  }
-
-  test("fewer than 5 shared lines -> None (never block on thin evidence)") {
-    assert(Bench.heavyLineDegradation(
-      Map("a" -> 3.0, "b" -> 2.0), Map("a" -> 9.0, "b" -> 9.0)).isEmpty)
-    assert(Bench.heavyLineDegradation(mins(1.0), Map.empty).isEmpty)
-  }
-
-  test("missing heavy lines re-base on shared lines without a false block") {
-    // the run dropped the record's 8 heaviest lines but ran everything
-    // else at full speed: the comparison re-bases on the heaviest lines
-    // BOTH runs have (2 slow heavy + 8 flat light) and must NOT block —
-    // a run with missing lines is a failed/partial run, and THAT route
-    // (failed.nonEmpty -> bench_last_failed.json) is what catches it
-    val cur = mins(2.0) -- (3 to 10).map(i => s"heavy_$i")
-    val d = Bench.heavyLineDegradation(mins(1.0), cur)
-    assert(d.exists(_ < 1.4), s"mostly-flat shared lines must not block: $d")
-  }
-
-  test("faster heavy lines report < 1 (never block an improvement)") {
-    val d = Bench.heavyLineDegradation(mins(1.0), mins(0.5))
-    assert(d.exists(_ < 0.7))
-  }
-
-  // ---- anchor-shift guard: a record refresh must not silently re-anchor
-  // the degradation baseline (r15 ADVICE #4, automated in r17)
-
-  test("anchor: refresh within ±1.15x passes") {
-    assert(Bench.anchorShift(canary(1.0), canary(1.1)).isEmpty)
-    assert(Bench.anchorShift(canary(1.0), canary(0.92)).isEmpty)
-  }
-
-  test("anchor: slow-but-not-degraded run (1.3x) is blocked from re-anchoring") {
-    // 1.3x passes the 1.4x degradation guard — without the anchor check
-    // it becomes the new baseline and a FURTHER 1.3x slide reads as 1.3x
-    val d = Bench.anchorShift(canary(1.0), canary(1.3))
-    assert(d.exists(r => r > 1.25 && r < 1.35), s"expected ~1.3: $d")
-  }
-
-  test("anchor: anomalously fast canary (0.7x) is blocked both directions") {
-    val d = Bench.anchorShift(canary(1.0), canary(0.7))
-    assert(d.isDefined, "a fast outlier record would turn normal runs " +
-      "into false degraded blocks")
-  }
-
-  test("anchor: thin evidence -> None") {
-    assert(Bench.anchorShift(
-      Map("q1" -> 1.0, "q2" -> 1.0), Map("q1" -> 9.0, "q2" -> 9.0)).isEmpty)
-  }
-
-  // ---- mid-tail guard: individual multi-second lines past 2x the record
-  // while every median sits clean (r17: seven band-candidate consumers at
-  // 1.4-2.7x rode a 1.002 canary median into the record silently)
-
-  /** the r17 shape: 8 light sub-0.5s lines, 8 clean multi-second lines,
-    * and a configurable set of mid-tail movers. */
-  private def lights(scale: Double): Map[String, Double] =
-    (1 to 8).map(i => s"light_$i" -> 0.05 * i * scale).toMap
-  private def tail(moved: Map[String, Double] = Map.empty): Map[String, Double] =
-    lights(1.0) ++
-      (1 to 8).map(i => s"mid_$i" -> (0.6 + 0.3 * i)).toMap ++ moved
-
-  test("mid-tail: clean refresh reports nothing") {
-    assert(Bench.midTailRegressions(tail(), tail()).isEmpty)
-  }
-
-  test("mid-tail: one multi-second line at 2.7x is caught behind clean medians") {
-    val cur = tail() + ("mid_3" -> (0.6 + 0.3 * 3) * 2.7)
-    // both medians stay clean on this shape — the exact r17 blind spot
-    assert(Bench.canaryDegradation(canary(1.0), canary(1.0)).exists(_ < 1.4))
-    val got = Bench.midTailRegressions(tail(), cur)
-    assert(got.map(_._1) == Seq("mid_3"), s"expected mid_3: $got")
-    assert(got.head._2 > 2.6 && got.head._2 < 2.8)
-  }
-
-  test("mid-tail: worst movers order and multi-line reporting") {
-    val cur = tail() + ("mid_2" -> (0.6 + 0.3 * 2) * 2.2) +
-      ("mid_6" -> (0.6 + 0.3 * 6) * 3.0)
-    assert(Bench.midTailRegressions(tail(), cur).map(_._1) ==
-      Seq("mid_6", "mid_2"))
-  }
-
-  test("mid-tail: sub-second lines never trip it (JIT noise territory)") {
-    // every light line 3x slower — all under the 0.5s record floor
-    val cur = tail() ++ lights(3.0)
-    assert(Bench.midTailRegressions(tail(), cur).isEmpty,
-      "sub-second noise must be the canary guard's job, not this one's")
-  }
-
-  test("mid-tail: exactly-2x and missing lines do not trip") {
-    val cur = (tail() + ("mid_4" -> (0.6 + 0.3 * 4) * 2.0)) - "mid_5"
-    assert(Bench.midTailRegressions(tail(), cur).isEmpty)
-  }
-
-  // ---- recall floors: every serving operating point is gated; a breach
-  // must surface (it routes the run to bench_last_failed.json)
-
-  test("recall floors: committed-record levels pass every gate") {
-    val healthy = Map("ann_ivf_pq" -> 0.21, "ann_ivf_pq_rerank" -> 0.65,
-      "ann_ivf_pq_4bit_rerank" -> 0.58, "ann_pq_rerank" -> 0.91,
-      "ann_opq_rerank" -> 0.92, "ann_quantized_topk" -> 0.97,
-      "ann_ivf_pq_disk" -> 0.21, "ann_ivf_pq_disk_rerank" -> 0.65)
-    assert(Bench.recallFloorBreaches(healthy).isEmpty)
-  }
-
-  test("recall floors: the persisted-index serving points are gated") {
-    // a store round-trip regression (codes/models/prune) collapses the
-    // DISK points while the in-memory twins stay healthy — the gate must
-    // name exactly the disk lines
-    val diskBroken = Map("ann_ivf_pq" -> 0.21, "ann_ivf_pq_rerank" -> 0.65,
-      "ann_ivf_pq_disk" -> 0.02, "ann_ivf_pq_disk_rerank" -> 0.11)
-    assert(Bench.recallFloorBreaches(diskBroken).map(_._1).toSet ==
-      Set("ann_ivf_pq_disk", "ann_ivf_pq_disk_rerank"))
-  }
-
-  test("recall floors: a breach on a newly gated line is reported") {
-    val regressed = Map("ann_pq_rerank" -> 0.41, "ann_opq_rerank" -> 0.92,
-      "ann_quantized_topk" -> 0.72)
-    val b = Bench.recallFloorBreaches(regressed)
-    assert(b.map(_._1).toSet == Set("ann_pq_rerank", "ann_quantized_topk"))
-    assert(b.forall { case (_, r, f) => r < f })
-  }
-
-  test("recall floors: absent lines (partial run) never breach") {
-    assert(Bench.recallFloorBreaches(Map.empty).isEmpty)
-  }
-
-  // ---- shared-total shift: the r18 in-run-drift seam
-
-  test("shared-total: the r18 run-2 profile (every per-family guard " +
-    "under threshold, shared total 1.17x) is blocked") {
-    // the measured run-2 shape: light lines near-flat, heavier lines
-    // drifting — per-line medians each under their family gates while
-    // the shared sum moved 1.17x (the band matches the ±1.15 anchor
-    // tolerance; FORCE is the explicit accept for a legitimate step)
-    val rec = Map("a" -> 0.2, "b" -> 0.3, "c" -> 0.25, "d" -> 4.0,
-      "e" -> 5.0, "f" -> 6.0)
-    val cur = Map("a" -> 0.21, "b" -> 0.32, "c" -> 0.26, "d" -> 4.7,
-      "e" -> 5.9, "f" -> 7.0)
-    val r = Bench.sharedTotalShift(rec, cur)
-    assert(r.isDefined && r.get > 1.15, s"got $r")
-  }
-
-  test("shared-total: a clean same-host refresh (~1.05x) passes") {
-    val rec = Map("a" -> 1.0, "b" -> 2.0, "c" -> 3.0, "d" -> 4.0, "e" -> 5.0)
-    val cur = rec.map { case (k, v) => k -> v * 1.05 }
-    assert(Bench.sharedTotalShift(rec, cur).isEmpty)
-  }
-
-  test("shared-total: new surface is excluded from the comparison") {
-    val rec = Map("a" -> 1.0, "b" -> 2.0, "c" -> 3.0, "d" -> 4.0, "e" -> 5.0)
-    // 20s of brand-new lines must not read as a slowdown
-    val cur = rec ++ Map("new1" -> 10.0, "new2" -> 10.0)
-    assert(Bench.sharedTotalShift(rec, cur).isEmpty)
-  }
-
-  test("shared-total: an anomalously fast total blocks re-anchoring too") {
-    val rec = Map("a" -> 1.0, "b" -> 2.0, "c" -> 3.0, "d" -> 4.0, "e" -> 5.0)
-    val cur = rec.map { case (k, v) => k -> v * 0.6 }
-    assert(Bench.sharedTotalShift(rec, cur).isDefined)
-  }
-
-  test("shared-total: thin evidence -> None") {
-    val rec = Map("a" -> 1.0, "b" -> 2.0)
-    assert(Bench.sharedTotalShift(rec,
-      rec.map { case (k, v) => k -> v * 3 }).isEmpty)
-  }
-
-  // ---- wall-clock budget shed (r20): past the budget, lines run 1 iter
-
-  test("effectiveIters sheds to 1 past the budget, keeps iters under it") {
-    assert(Bench.effectiveIters(3, elapsedSec = 100, budgetSec = 900) == 3)
-    assert(Bench.effectiveIters(3, elapsedSec = 901, budgetSec = 900) == 1)
-    // budget 0 disables shedding entirely
-    assert(Bench.effectiveIters(3, elapsedSec = 1e9, budgetSec = 0) == 3)
-  }
-
-  // ---- incremental progress emission (r20): a killed run's partial
-  // JSONL stream must yield every completed per-query number — r19's
-  // all-at-the-end emission lost ~25 min of measurements to rc=124
-
-  test("per-query timings are recoverable from a partial progress stream") {
-    val lines = Seq(
-      Bench.benchLineEvent("q1_pricing_summary", 0.412, 0.398, 3, 12.3),
-      Bench.benchLineEvent("dd_minhash_lsh", 1.933, 1.801, 3, 40.0),
-      """{"metric":"canary_echo","ratio":1.02,"elapsed_sec":55.0}""",
-      "this line is the kill point garbage",
-      Bench.benchLineEvent("ta_langid", 0.701, 0.650, 1, 60.1)
-      // ... and the final summary line never arrives (killed)
-    )
-    val rec = Bench.parseProgress(lines.iterator)
-    assert(rec.size == 3)
-    assert(rec("q1_pricing_summary") == (0.412, 0.398))
-    assert(rec("dd_minhash_lsh") == (1.933, 1.801))
-    assert(rec("ta_langid") == (0.701, 0.65))
-  }
-
-  test("a re-emitted line supersedes its earlier event") {
-    val rec = Bench.parseProgress(Iterator(
-      Bench.benchLineEvent("x", 2.0, 1.9, 3, 10.0),
-      Bench.benchLineEvent("x", 1.0, 0.9, 1, 20.0)))
-    assert(rec("x") == (1.0, 0.9))
-  }
-
-  test("bench line events carry the pre-line membw gauge when sampled") {
-    val ev = Bench.benchLineEvent("dd_semdedup_two", 5.3, 5.1, 3, 700.0,
-      membw = Some(9.87))
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(ev)
-    assert(math.abs(n.path("membw").asDouble() - 9.87) < 1e-9)
-    // the progress parser still recovers the timing from a gauged line
-    assert(Bench.parseProgress(Iterator(ev))("dd_semdedup_two") == (5.3, 5.1))
-    // unsampled lines omit the field entirely
-    val plain = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.benchLineEvent("x", 1.0, 1.0, 3, 1.0))
-    assert(!plain.has("membw"))
-  }
 
   test("membwGauge returns a positive GB/s sample on this host") {
     assert(Bench.membwGauge().exists(_ > 0.0))
   }
-
-  test("bench line events escape JSON-hostile names") {
-    val ev = Bench.benchLineEvent("""we"ird\name""", 1.0, 1.0, 3, 1.0)
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(ev)
-    assert(n.path("name").asText() == """we"ird\name""")
-  }
-
-  // ---- host telemetry (r20): WHICH resource degraded must be in the
-  // run's own record (steal/iowait fractions, PSI stall deltas)
 
   test("hostDeltas normalizes cpu jiffies to fractions, keeps raw deltas") {
     val start = Map("cpu_total" -> 1000.0, "cpu_steal" -> 10.0,
@@ -347,58 +43,5 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(d("membw_gbps_start") == 8.0 && d("membw_gbps_end") == 0.2)
     assert(d("cpu_mhz_mean_start") == 2600.0)
     assert(!d.contains("membw_gbps"))
-  }
-
-  // ---- contention tagging (r22): threshold scales with the core count
-  // and the warning names the actual trigger — the flat loadavg>2.0
-  // tagged the driver's clean 0-shed r21 run on a 32-core box at 2.33
-
-  test("contention: loadavg 2.33 on 32 cores is NOT contended") {
-    assert(Bench.contentionTriggers(javaProcs = 2, loadavg1m = 2.33,
-      cpus = 32).isEmpty)
-  }
-
-  test("contention: loadavg above cores/4 trips, and names loadavg") {
-    val t = Bench.contentionTriggers(javaProcs = 2, loadavg1m = 9.1, cpus = 32)
-    assert(t.size == 1 && t.head.contains("loadavg"), t.toString)
-  }
-
-  test("contention: the 2.0 floor still guards small core counts") {
-    // cpus/4 = 1 for a 4-core box; the floor keeps the old threshold
-    assert(Bench.contentionTriggers(2, 1.9, cpus = 4).isEmpty)
-    assert(Bench.contentionTriggers(2, 2.3, cpus = 4).nonEmpty)
-  }
-
-  test("contention: a third java process trips regardless of loadavg, " +
-    "and names java_procs") {
-    val t = Bench.contentionTriggers(javaProcs = 3, loadavg1m = 0.1, cpus = 32)
-    assert(t.size == 1 && t.head.contains("java_procs"), t.toString)
-  }
-
-  test("gitHead resolves this repo's HEAD to a 40-hex sha") {
-    val sha = Bench.gitHead()
-    assert(sha.length == 40 && sha.forall(c =>
-      c.isDigit || ('a' to 'f').contains(c)), s"got '$sha'")
-  }
-
-  // ---- tmp-dir sweep scoping: only dirs THIS JVM registered are swept
-
-  test("sweepTmpDirs deletes owned dirs only, leaving foreign dirs alone") {
-    // a "foreign" dir simulating a concurrently running JVM's staging —
-    // same prefix, NOT registered through ownedTmpDir
-    val foreign = java.nio.file.Files.createTempDirectory("graftguard_x")
-    java.nio.file.Files.write(foreign.resolve("live.bin"),
-      Array[Byte](1, 2, 3))
-    val owned = Bench.ownedTmpDir("graftguard_x")
-    java.nio.file.Files.write(owned.resolve("stage.bin"), Array[Byte](9))
-    try {
-      Bench.sweepTmpDirs("graftguard_x")
-      assert(!java.nio.file.Files.exists(owned), "owned dir must be swept")
-      assert(java.nio.file.Files.exists(foreign.resolve("live.bin")),
-        "a foreign JVM's staging must survive the default sweep")
-    } finally {
-      java.nio.file.Files.deleteIfExists(foreign.resolve("live.bin"))
-      java.nio.file.Files.deleteIfExists(foreign)
-    }
   }
 }

@@ -2,32 +2,39 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SHJ kill switch must be all-or-nothing: r21 ADVICE found "0m"/"off"
-  * half-applied (preferSortMergeJoin false + a zero/garbage AQE threshold).
-  * Any value Spark cannot read as a positive byte count now disables BOTH
-  * knobs, restoring stock sort-merge behavior. */
+/** [[Engine.session]] prefers shuffled-hash joins; its scaladoc promises
+  * that sort-merge joins come back at runtime through two `spark.conf.set`
+  * calls. This spec holds the engine's tuning to that promise. */
 class EngineConfigSpec extends AnyFunSuite {
 
-  test("positive byte strings enable SHJ, passed through verbatim") {
-    assert(Engine.shjThresholdFrom("128m").contains("128m"))
-    assert(Engine.shjThresholdFrom(" 1g ").contains("1g"))
-    assert(Engine.shjThresholdFrom("134217728").contains("134217728"))
+  private val restoreSortMerge = Seq(
+    "spark.sql.join.preferSortMergeJoin" -> "true",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "0")
+
+  /** Executed plan of an equi-join too large to broadcast, under `conf`. */
+  private def joinPlan(conf: Seq[(String, String)]): String = {
+    val s = TestSpark.spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    val j = s.range(0, 1000).toDF("id")
+      .join(s.range(0, 1000).selectExpr("id", "id * 2 as v"), "id")
+    j.collect()
+    j.queryExecution.executedPlan.toString
   }
 
-  test("every off-ish spelling fully disables") {
-    for (v <- Seq("", "0", "0m", "0g", "off", "none", "false", "  "))
-      assert(Engine.shjThresholdFrom(v).isEmpty, s"'$v' must disable")
+  test("the engine's tuning confs are all settable at runtime") {
+    Engine.tuning.keys.foreach(k =>
+      assert(TestSpark.spark.conf.isModifiable(k), k))
   }
 
-  test("negative and garbage values disable rather than half-apply") {
-    for (v <- Seq("-128m", "12 potatoes", "m128"))
-      assert(Engine.shjThresholdFrom(v).isEmpty, s"'$v' must disable")
+  test("the engine's tuning plans shuffled-hash joins") {
+    val plan = joinPlan(Engine.tuning.toSeq)
+    assert(plan.contains("ShuffledHashJoin"), plan)
   }
 
-  test("parquet codec: trimmed pass-through, empty keeps Spark's default") {
-    assert(Engine.parquetCodecFrom("zstd").contains("zstd"))
-    assert(Engine.parquetCodecFrom(" snappy ").contains("snappy"))
-    assert(Engine.parquetCodecFrom("").isEmpty)
-    assert(Engine.parquetCodecFrom("   ").isEmpty)
+  test("the documented runtime reset restores sort-merge joins") {
+    val plan = joinPlan(Engine.tuning.toSeq ++ restoreSortMerge)
+    assert(plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"), plan)
   }
 }

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * variants compute what they claim, but recall against the exact scorer
   * is what a user actually trades for the speedup. Deterministic: the
   * hyperplanes/centroids derive from salted hashes, so these numbers are
-  * stable across runs. The bench logs the same metric at sf0.1
-  * (`recall_at_10` in the BENCH json line). */
+  * stable across runs. `AnnQualityGatesSpec` gates the serving
+  * operating points' recall at sf0.1. */
 class AnnRecallSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 

@@ -255,36 +255,4 @@ class SpecPushServerSpec extends AnyFunSuite {
       assert(http("GET", s"$base/nope")._1 == 404)
     } finally server.stop()
   }
-
-  test("GET /bench/guard surfaces the bench's record-guard decision + messages") {
-    val specDir = Files.createTempDirectory("graft_push_guard_specs")
-    val benchDir = Files.createTempDirectory("graft_push_guard_bench")
-    val server = new SpecPushServer(specDir, port = 0,
-      benchGuardDir = Some(benchDir))
-    server.start()
-    try {
-      val url = s"http://127.0.0.1:${server.boundPort}/bench/guard"
-      // no guard state yet → 404, never a 500
-      assert(http("GET", url)._1 == 404)
-      // the decision the bench writes (a failed-route run), without msgs
-      Files.writeString(benchDir.resolve("bench_guard.json"),
-        """{"route":"failed","reason":"2 failed line(s): q1, q2","target":"bench_last_failed.json","contended":false,"failed_count":2}""" + "\n")
-      val (c1, b1) = http("GET", url)
-      assert(c1 == 200 && b1.contains("\"route\":\"failed\"")
-        && b1.contains("q1, q2") && b1.contains("\"last_failed_msgs\":null"), b1)
-      // the failure messages land too once the bench persisted them
-      Files.writeString(benchDir.resolve("bench_failed_msgs.json"),
-        """{"q1":"boom","q2":"disk full"}""" + "\n")
-      val (c2, b2) = http("GET", url)
-      assert(c2 == 200 && b2.contains("\"last_failed_msgs\":{\"q1\":\"boom\"")
-        && b2.contains("disk full"), b2)
-      // mutations are refused — this is a read-only ops surface
-      assert(http("POST", url, Some("{}"))._1 == 405)
-      // round-trip of a CLEAN decision (the refresh path)
-      Files.writeString(benchDir.resolve("bench_guard.json"),
-        """{"route":"clean","reason":"full run, all guards green — record refreshed","target":"bench_last.json","contended":false,"failed_count":0}""" + "\n")
-      val (c3, b3) = http("GET", url)
-      assert(c3 == 200 && b3.contains("\"route\":\"clean\""), b3)
-    } finally server.stop()
-  }
 }
