@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.{Orchestrator, PipelineSpec, SpecDirWatcher}
+import java.io.PrintStream
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -12,31 +13,46 @@ import scala.jdk.CollectionConverters._
   *
   *   graft run <spec.json> [<spec2.json> ...]   run pipelines once
   *   graft reconcile <specDir>                  reconcile *.json in a dir
+  *     (both exit 1 when a pipeline failed past its retries)
   *   graft watch <specDir> [intervalMs]         reconcile in a LOOP (daemon)
   *   graft validate <spec.json>                 parse + validate only
   */
 object Main {
 
+  /** Apply desired state once (`run` / `reconcile`) and return the exit
+    * code: 0 when every component this round started or kept has
+    * succeeded, 1 otherwise. Each failed component's hash prefix and cause
+    * chain go to `err` — the orchestrator has already retried it, so the
+    * failure is final for this invocation. */
+  def reconcileOnce(orch: Orchestrator, specs: Seq[PipelineSpec],
+                    out: PrintStream = System.out,
+                    err: PrintStream = System.err): Int = {
+    val (started, kept, stopped) = orch.reconcile(specs)
+    out.println(s"started=${started.size} kept=${kept.size} stopped=${stopped.size}")
+    val failed = (started ++ kept).toSeq.sorted.flatMap { h =>
+      orch.stateOf(h).collect { case Orchestrator.Failed(e) => h -> e }
+    }
+    failed.foreach { case (h, e) =>
+      err.println(s"failed ${h.take(12)}: ${Orchestrator.causeChain(e)}")
+    }
+    if (failed.isEmpty) 0 else 1
+  }
+
+  private def reconcileCommand(specs: => Seq[PipelineSpec]): Unit = {
+    val spark = Engine.session()
+    val code = try reconcileOnce(new Orchestrator(spark), specs)
+    finally spark.stop()
+    if (code != 0) sys.exit(code)
+  }
+
   def main(args: Array[String]): Unit = args.toList match {
     case "run" :: files if files.nonEmpty =>
-      val spark = Engine.session()
-      try {
-        val orch = new Orchestrator(spark)
-        val specs = files.map(f => PipelineSpec.fromJson(readFile(Paths.get(f))))
-        val (started, kept, stopped) = orch.reconcile(specs)
-        println(s"started=${started.size} kept=${kept.size} stopped=${stopped.size}")
-      } finally spark.stop()
+      reconcileCommand(files.map(f => PipelineSpec.fromJson(readFile(Paths.get(f)))))
 
     case "reconcile" :: dir :: Nil =>
-      val spark = Engine.session()
-      try {
-        val orch = new Orchestrator(spark)
-        val specs = Files.list(Paths.get(dir)).iterator().asScala
-          .filter(_.toString.endsWith(".json")).toSeq.sortBy(_.toString)
-          .map(p => PipelineSpec.fromJson(readFile(p)))
-        val (started, kept, stopped) = orch.reconcile(specs)
-        println(s"started=${started.size} kept=${kept.size} stopped=${stopped.size}")
-      } finally spark.stop()
+      reconcileCommand(Files.list(Paths.get(dir)).iterator().asScala
+        .filter(_.toString.endsWith(".json")).toSeq.sortBy(_.toString)
+        .map(p => PipelineSpec.fromJson(readFile(p))))
 
     // the daemon mode (reference `myceliald/src/scheduler.rs:403-485`):
     // poll the dir, hash-diff reconcile, supervise, loop — vs `reconcile`,

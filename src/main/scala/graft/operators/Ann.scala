@@ -1134,11 +1134,11 @@ object Ann {
     * together — the same dedup-vs-split tradeoff a single-level K=n^{2/3}
     * would have, at 2·n^{1/3} instead of n^{2/3} assignment width.
     * Exact duplicates are immune (the pre-collapse merges them before
-    * any cell is consulted). Measured across the sf1→sf10 decade as the
-    * `dd_semdedup_two` contrast line in `scale_sf10.json`.
+    * any cell is consulted). Measured across the sf1→sf10 decade
+    * (10 → 100 planted copies): two-level went 25.2 s → 105.8 s (4.2x)
+    * where single-level went 14.2 s → 160.7 s (11.3x).
     *
-    * MEASURED recall price (r19, planted-twin audit in
-    * `scale_sf1.json:semdedup_twin_recall` — a twin is recalled iff
+    * MEASURED recall price (planted-twin audit — a twin is recalled iff
     * dedup removed it): at the near point (cosine ≈ 0.9999) both
     * variants recall 1.000 at sf0.1 AND sf1 — near-identical residuals
     * agree on both levels, so the mass-duplicate case pays nothing. At

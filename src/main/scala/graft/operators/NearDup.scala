@@ -343,8 +343,8 @@ object NearDup {
     * (clustering connectivity rides the hub edges), the same residual
     * r17's rep-star fallback produced at this boundary. Everywhere caps
     * do not bite — the sf0.01 gate, sf0.1, the sf1 twin (157/157) —
-    * the enumeration is exact; `twin_parity_sf10.json` records the
-    * adjudication. */
+    * the enumeration is exact (the sf10 twin's oracle compare read
+    * 628,505 pairs against 628,985, exactly those 480). */
   def simhashPairs(docs: DataFrame, idCol: String = "doc_id",
                    textCol: String = "text", bits: Int = 60, nBands: Int = 6,
                    hammingMax: Int = 3, maxBucket: Long = 1000): DataFrame = {

@@ -200,10 +200,19 @@ final class SpecDirWatcher(orch: Orchestrator, dir: java.nio.file.Path) {
   */
 final class IncrementalRunner(spark: SparkSession, store: StateStore) {
   import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.functions.max
+  import org.apache.spark.sql.functions.{count, lit, max}
 
   /** Run one tick. Returns the new watermark, or None when the slice was
-    * empty (caught-up). `runQuery` receives the bound SQL. */
+    * empty (caught-up). `runQuery` receives the bound SQL.
+    *
+    * The slice is persisted and reaches Spark through ONE action before
+    * the sink: `agg(count(1), max(var))` both decides emptiness and yields
+    * the new watermark, and it fills the cache the sink then reads. The
+    * watermark therefore covers exactly the rows the sink was handed —
+    * rows landing in the source while the sink runs are left for the next
+    * tick. The state write comes strictly after the sink returns
+    * (ack-after-commit), so a sink failure leaves the watermark where it
+    * was and the slice is replayed. */
   def tick(pipeline: String, section: String, query: StatefulQuery,
            runQuery: String => DataFrame,
            sink: DataFrame => Unit): Option[Long] = {
@@ -212,14 +221,13 @@ final class IncrementalRunner(spark: SparkSession, store: StateStore) {
     val wm = store.getLong(pipeline, section, varName)
       .getOrElse(StatefulQuery.InitialWatermark)
     val slice = runQuery(query.bind(wm))
-    // one pass: cache the slice, write it, then fold the new watermark
     slice.persist()
     try {
-      val rows = slice.count()
-      if (rows == 0) None
+      val stats = slice.agg(count(lit(1)), max(varName)).head()
+      if (stats.getLong(0) == 0) None
       else {
+        val newWm = stats.getLong(1)
         sink(slice)
-        val newWm = slice.agg(max(varName)).head().getLong(0)
         // state write strictly after sink success — ack-after-commit
         store.set(pipeline, section, varName -> newWm.toString)
         Some(newWm)

@@ -356,8 +356,15 @@ object Sinks {
     * `sections/sqlite_connector/src/destination.rs:91`): rows whose key
     * already exists in the target are dropped before the write, so
     * at-least-once replay (crash between sink commit and state write)
-    * becomes effectively-once. The existing-keys scan is column-pruned to
-    * the key columns and the anti-join broadcasts when the batch is small.
+    * becomes effectively-once. The existing target is read with the
+    * incoming batch's schema — no schema-inference job — and the scan is
+    * column-pruned to the key columns; the anti-join takes the keys as
+    * they are, with no `distinct` (duplicate existing keys cannot change
+    * a left-anti result, and de-duplicating them shuffled every existing
+    * key on every append). Because the schema is imposed rather than
+    * inferred, a target whose key type is incompatible with the batch
+    * fails when the key column is read, where an inferred read let the
+    * join cast it.
     *
     * At lake scale the existence scan MUST prune: partition the target by
     * a batch/date column and pass `existingFilter` so only the partitions
@@ -394,7 +401,9 @@ object Sinks {
     val fresh =
       if (!hasData) df
       else {
-        val existing = spark.read.parquet(path)
+        // the full incoming schema, not just the keys: `existingFilter`
+        // may name any of the batch's columns
+        val existing = spark.read.schema(df.schema).parquet(path)
         if (existingFilter.isEmpty) {
           // the file list is already materialized in the relation's file
           // index — counting it costs no extra listing. Check the size
@@ -409,8 +418,7 @@ object Sinks {
               s"target and pass a pruning predicate before this grows further")
         }
         val scanned = existingFilter.fold(existing)(existing.filter)
-        df.join(scanned.select(keyCols.map(col): _*).distinct(),
-          keyCols, "left_anti")
+        df.join(scanned.select(keyCols.map(col): _*), keyCols, "left_anti")
       }
     fresh.write.mode("append").parquet(path)
   }

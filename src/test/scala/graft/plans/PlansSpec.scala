@@ -185,6 +185,87 @@ class IncrementalRunnerSpec extends AnyFunSuite {
     })
     assert(committed.size == 200 && committed.distinct.size == 100)
   }
+
+  test("tick runs one slice action, before the sink") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    graft.Tables.registerAll(spark, TestSpark.sf)
+    val store = new StateStore(Files.createTempDirectory("graft_state").toString)
+    val runner = new IncrementalRunner(spark, store)
+    val q = StatefulQuery(
+      "SELECT o_orderkey FROM orders WHERE o_orderkey > $o_orderkey::i64 ORDER BY o_orderkey LIMIT 100")
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        actions.add(funcName)
+    }
+    def seen(): Vector[String] = {
+      org.apache.spark.graft.TestBus.flush(spark.sparkContext)
+      actions.asScala.toVector
+    }
+    spark.listenerManager.register(listener)
+    try {
+      seen()
+      actions.clear()
+      var beforeSink = Vector.empty[String]
+      var sinkActions = 0
+      var rows = 0
+      runner.tick("p", "s", q, spark.sql(_), df => {
+        beforeSink = seen()
+        rows = df.collect().length // the sink's own action, left out below
+        sinkActions = seen().size - beforeSink.size
+      })
+      val all = seen()
+      assert(rows == 100)
+      assert(beforeSink == Vector("head"), s"runner actions before the sink: $beforeSink")
+      assert(all.size == beforeSink.size + sinkActions,
+        s"runner actions after the sink: ${all.drop(beforeSink.size + sinkActions)}")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("rows landing while the sink runs wait for the next tick, committed once") {
+    import scala.jdk.CollectionConverters._
+    val store = new StateStore(Files.createTempDirectory("graft_state").toString)
+    val runner = new IncrementalRunner(spark, store)
+    val q = StatefulQuery("SELECT id FROM live_src WHERE id > $id::i64")
+    LiveSource.ids.clear()
+    LiveSource.land(1L to 50L)
+    def runQuery(sql: String) = {
+      LiveSource.frame(spark).createOrReplaceTempView("live_src")
+      spark.sql(sql)
+    }
+    var committed = Vector.empty[Long]
+    def collect(df: org.apache.spark.sql.DataFrame): Unit =
+      committed ++= df.collect().map(_.getLong(0))
+    val wm1 = runner.tick("p", "s", q, runQuery, df => {
+      LiveSource.land(51L to 80L) // lands before the sink reads its slice
+      collect(df)
+    })
+    assert(committed.sorted == (1L to 50L).toVector)
+    assert(wm1.contains(50L) && store.getLong("p", "s", "id").contains(50L),
+      "the stored watermark must not cover rows the sink was not handed")
+    assert(runner.tick("p", "s", q, runQuery, collect).contains(80L))
+    assert(runner.tick("p", "s", q, runQuery, collect).isEmpty)
+    assert(committed.sorted == (1L to 80L).toVector, "every row committed exactly once")
+    assert(LiveSource.ids.asScala.size == 80)
+  }
+}
+
+/** A source whose rows are read at execution time, not at plan time: a
+  * frame built by [[frame]] sees every id landed before the job runs, as a
+  * database table would (local-mode executors share this JVM). */
+private object LiveSource {
+  val ids = new java.util.concurrent.CopyOnWriteArrayList[java.lang.Long]()
+  def land(r: Seq[Long]): Unit = r.foreach(i => ids.add(i))
+  def frame(spark: org.apache.spark.sql.SparkSession) = {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    spark.range(1).flatMap(_ => LiveSource.ids.asScala.map(_.longValue).toSeq)
+      .toDF("id")
+  }
 }
 
 class OrchestratorSpec extends AnyFunSuite {

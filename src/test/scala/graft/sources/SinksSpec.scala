@@ -131,6 +131,54 @@ class SinksSpec extends AnyFunSuite {
     assert(warnings.size == 1, s"expected exactly one warning, got $warnings")
   }
 
+  test("idempotentParquetAppend into an existing target runs no inference or key-shuffle job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("graft_idem5").toString
+    Sinks.idempotentParquetAppend(Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+      s"$dir/t", Seq("id"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val batch = Seq((2L, "b"), (3L, "c")).toDF("id", "v")
+    org.apache.spark.graft.TestBus.flush(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Sinks.idempotentParquetAppend(batch, s"$dir/t", Seq("id"))
+      org.apache.spark.graft.TestBus.flush(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the existing keys' broadcast and the write; an inferred read and a
+    // distinct over the existing keys took two more
+    assert(jobs.get == 2, s"${jobs.get} jobs")
+    assert(spark.read.parquet(s"$dir/t").select("id").as[Long].collect().sorted
+      .sameElements(Array(1L, 2L, 3L)))
+  }
+
+  test("idempotentParquetAppend existingFilter may name a non-key column") {
+    val dir = Files.createTempDirectory("graft_idem6").toString
+    Sinks.idempotentParquetAppend(
+      Seq((1L, "a", "d1"), (2L, "b", "d2")).toDF("id", "v", "day"), s"$dir/t", Seq("id"))
+    // the scan sees only day d1: id 1 is dropped, id 2 (existing under d2,
+    // outside the filter) and id 3 are appended
+    Sinks.idempotentParquetAppend(
+      Seq((1L, "a", "d1"), (2L, "b", "d2"), (3L, "c", "d3")).toDF("id", "v", "day"),
+      s"$dir/t", Seq("id"), existingFilter = Some(col("day") === "d1"))
+    val ids = spark.read.parquet(s"$dir/t").select("id").as[Long].collect().sorted
+    assert(ids.sameElements(Array(1L, 2L, 2L, 3L)), ids.mkString(","))
+  }
+
+  test("idempotentParquetAppend drops replayed keys against a target holding duplicate keys") {
+    val dir = Files.createTempDirectory("graft_idem7").toString
+    Seq((1L, "a"), (1L, "a"), (2L, "b"), (2L, "b")).toDF("id", "v")
+      .write.parquet(s"$dir/t")
+    Sinks.idempotentParquetAppend(
+      Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("id", "v"), s"$dir/t", Seq("id"))
+    val back = spark.read.parquet(s"$dir/t")
+    assert(back.count() == 5)
+    assert(back.filter($"id" === 3L).count() == 1)
+    assert(back.filter($"v".isin("x", "y")).count() == 0, "a replayed key was appended")
+  }
+
   test("dir source lists files with pattern + cursor semantics") {
     val df = Sources.dir(spark, TestSpark.sf, pattern = ".*\\.parquet$")
     val files = df.select("path").as[String].collect()
