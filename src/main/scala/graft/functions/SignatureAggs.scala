@@ -5,10 +5,11 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -110,6 +111,123 @@ object MinhashSigAgg {
   def apply(c: Column, perms: Seq[(Long, Long)], p: Long): Column =
     ColumnBridge.column(new MinhashSigAgg(ColumnBridge.expression(c),
       perms.map(_._1), perms.map(_._2), p).toAggregateExpression())
+}
+
+/** Row-wise [[MinhashSigAgg]]: the `slots` MinHash minima of one array of
+  * base hashes (a document's [[ShingleHashSet]]), the same values the
+  * aggregate folds over that array's exploded rows. An empty array gives
+  * null, like the aggregate over no rows. */
+case class MinhashSignature(child: Expression, coeffA: Seq[Long], coeffB: Seq[Long], p: Long)
+  extends UnaryExpression {
+
+  require(coeffA.length == coeffB.length && coeffA.nonEmpty)
+  @transient private lazy val a = coeffA.toArray
+  @transient private lazy val b = coeffB.toArray
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"argument must be array<bigint>, got $t")
+  }
+
+  override def nullSafeEval(v: Any): Any = {
+    val hs = v.asInstanceOf[ArrayData]
+    val n = hs.numElements()
+    if (n == 0) return null
+    val sig = Array.fill(a.length)(Long.MaxValue)
+    var k = 0
+    while (k < n) {
+      val h = hs.getLong(k)
+      var i = 0
+      while (i < sig.length) {
+        val x = (a(i) * h + b(i)) % p
+        if (x < sig(i)) sig(i) = x
+        i += 1
+      }
+      k += 1
+    }
+    new GenericArrayData(sig)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("minhash", this)
+    val r = ctx.freshName("sig")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""Object $r = $self.nullSafeEval($c);
+         |if ($r == null) ${ev.isNull} = true;
+         |else ${ev.value} = (ArrayData) $r;""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(c: Expression): MinhashSignature =
+    copy(child = c)
+  override def prettyName: String = "minhash"
+  override def toString: String = s"minhash($child, ${coeffA.length} slots)"
+}
+
+object MinhashSignature {
+  def apply(c: Column, perms: Seq[(Long, Long)], p: Long): Column =
+    ColumnBridge.column(new MinhashSignature(ColumnBridge.expression(c),
+      perms.map(_._1), perms.map(_._2), p))
+}
+
+/** The `nBands` LSH band keys of a MinHash signature in one loop: band
+  * `b` is the [[Hash60]] of `"b," + slots[b·r .. b·r+r-1].mkString("_")`
+  * (a band past the end of a short signature keeps the slots that exist).
+  * Value-identical to the declarative `hash60(concat_ws(",", b,
+  * concat_ws("_", slice(sig, ...))))` per band, whose slices, casts to
+  * strings and string concatenations cost more than the MinHash itself.
+  * A null signature gives null. */
+case class MinhashBandKeys(child: Expression, rowsPerBand: Int, nBands: Int)
+  extends UnaryExpression {
+
+  require(rowsPerBand >= 1 && nBands >= 1)
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"argument must be array<bigint>, got $t")
+  }
+
+  override def nullSafeEval(v: Any): Any =
+    MinhashBandKeys.compute(v.asInstanceOf[ArrayData], rowsPerBand, nBands)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.MinhashBandKeys.compute($c, $rowsPerBand, $nBands)")
+
+  override protected def withNewChildInternal(c: Expression): MinhashBandKeys =
+    copy(child = c)
+  override def prettyName: String = "minhash_band_keys"
+}
+
+object MinhashBandKeys {
+  def compute(sig: ArrayData, rowsPerBand: Int, nBands: Int): ArrayData = {
+    val n = sig.numElements()
+    val out = new Array[Long](nBands)
+    val sb = new java.lang.StringBuilder(16 + rowsPerBand * 11)
+    var b = 0
+    while (b < nBands) {
+      sb.setLength(0)
+      sb.append(b).append(',')
+      var i = b * rowsPerBand
+      val end = math.min(i + rowsPerBand, n)
+      while (i < end) {
+        if (i > b * rowsPerBand) sb.append('_')
+        sb.append(sig.getLong(i))
+        i += 1
+      }
+      out(b) = Hash60.hashBytes(
+        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  def apply(c: Column, rowsPerBand: Int, nBands: Int): Column =
+    ColumnBridge.column(MinhashBandKeys(ColumnBridge.expression(c), rowsPerBand, nBands))
 }
 
 /** The assembled `bits`-bit SimHash of a group's token hashes in one

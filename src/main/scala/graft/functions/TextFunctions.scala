@@ -108,14 +108,12 @@ object TextFunctions {
     }: _*)
 
   /** LSH band keys from a MinHash signature: split k slots into bands of
-    * `rowsPerBand`, hash each band. Docs sharing any band key are candidate
-    * near-dups. */
+    * `rowsPerBand`, hash each band — band `b` is the [[hash60]] of
+    * `"b," + slots.mkString("_")`, the key the oracle SQL computes. Docs
+    * sharing any band key are candidate near-dups. A null signature keys
+    * like an empty one. One native loop ([[MinhashBandKeys]]). */
   def minhashBands(sig: Column, rowsPerBand: Int, nBands: Int): Column =
-    array((0 until nBands).map { b =>
-      hash60(concat_ws(",",
-        lit(b.toString),
-        concat_ws("_", slice(sig, b * rowsPerBand + 1, rowsPerBand))))
-    }: _*)
+    MinhashBandKeys(coalesce(sig, typedLit(Array.empty[Long])), rowsPerBand, nBands)
 
   /** 64-bit SimHash over token hashes: bit j of the result is 1 iff more
     * token hashes have bit j set than unset. Hamming-close SimHashes ⇒

@@ -46,11 +46,52 @@ case class WordNgramHashes(child: Expression, n: Int) extends UnaryExpression {
     copy(child = c)
 }
 
+/** A document's distinct shingle set in MinHash space: the
+  * [[WordNgramHashes]] of `child` reduced mod `p` and deduped AFTER the
+  * reduction, so two 60-bit hashes that meet mod `p` count once. Equal as
+  * a set to `collect_set(h % p)` over the exploded [[WordNgramHashes]]
+  * rows of one document, without the rows. */
+case class ShingleHashSet(child: Expression, n: Int, p: Long) extends UnaryExpression {
+
+  require(n >= 1, "n-gram size must be >= 1")
+  require(p >= 1, "modulus must be >= 1")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"argument must be string, got $t")
+    }
+
+  override def nullSafeEval(v: Any): Any =
+    WordNgramHashes.computeMod(v.asInstanceOf[UTF8String], n, p)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.WordNgramHashes.computeMod($c, $n, ${p}L)")
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+object ShingleHashSet {
+  def apply(c: Column, n: Int, p: Long): Column =
+    ColumnBridge.column(ShingleHashSet(ColumnBridge.expression(c), n, p))
+}
+
 object WordNgramHashes {
 
   private val Empty = new GenericArrayData(Array.emptyLongArray)
 
-  def compute(s: UTF8String, n: Int): ArrayData = {
+  def compute(s: UTF8String, n: Int): ArrayData = hashes(s, n, 0L)
+
+  /** [[compute]] with every hash reduced mod `p` before the dedup. */
+  def computeMod(s: UTF8String, n: Int, p: Long): ArrayData = hashes(s, n, p)
+
+  // p = 0: the raw 60-bit hashes
+  private def hashes(s: UTF8String, n: Int, p: Long): ArrayData = {
     val str = s.toString.trim
     if (str.isEmpty) return Empty
     val toks = str.split("\\s+")
@@ -66,8 +107,9 @@ object WordNgramHashes {
         sb.append(toks(i + j))
         j += 1
       }
-      seen.add(Hash60.hashBytes(
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      val h = Hash60.hashBytes(
+        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      seen.add(if (p > 0) h % p else h)
       i += 1
     }
     val out = new Array[Long](seen.size)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.functions.VectorFunctions
+import graft.functions.{BoundedCollect, BucketPairs, VectorFunctions}
 
 /** Bounded pair generation for near-dup / similarity pipelines.
   *
@@ -15,18 +15,18 @@ import graft.functions.VectorFunctions
   * bounded strategy only past an explicit cap.
   *
   * Shape: group sizes come from a partial+final AGGREGATE over the
-  * blocking key, joined back onto the rows — NOT a window count. A window
+  * blocking key — NOT a window count. A window
   * `count().over(partitionBy(key))` buffers each group on one task, so the
   * very skew these caps exist for (one hot label/bucket) would concentrate
   * the whole hot group on a single straggler task *before* the bounded
   * path could split it — and a constant-foldable key (`lit("hot")`) is
-  * folded out of a window spec entirely, collapsing to ONE partition. The
-  * aggregate form ships only (key, count) rows; the two self-join sides
-  * remain identical subtrees so their exchange is computed once and
-  * reused.
+  * folded out of a window spec entirely, collapsing to ONE partition.
+  * [[boundedCosinePairs]] ships (label, count) rows and joins them back;
+  * [[cappedBandCandidates]] folds count, hub and a member list bounded at
+  * the cap into one aggregate per bucket and emits the pairs from it.
   *
   * Cap accounting is NOT silent and costs no extra pass: `observe()`
-  * metrics ride the same window frame and a per-session
+  * metrics ride the sizing aggregates and a per-session
   * [[QueryExecutionListener]] logs them whenever a cap actually bit.
   * No driver-side pre-count of the input — at 100 TB that would double
   * the scan.
@@ -46,10 +46,10 @@ object Blocking {
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
   /** Idempotent per-session listener: surfaces the observe() cap metrics on
-    * every successful action over a plan that contains them. (Under a
-    * self-join without exchange reuse the member-row counter can be
-    * evaluated per branch and overstate; it is a did-the-cap-bite signal,
-    * not an exact audit count.) */
+    * every successful action over a plan that contains them. (A sizing
+    * frame read by two branches can have its member-row counter evaluated
+    * once per branch and overstate; it is a did-the-cap-bite signal, not
+    * an exact audit count.) */
   private[operators] def ensureCapListener(spark: SparkSession): Unit =
     if (installedSessions.add(spark)) {
       spark.listenerManager.register(new QueryExecutionListener {
@@ -117,8 +117,8 @@ object Blocking {
 
   /** Candidate pairs from MinHash band buckets, degenerate-bucket capped:
     * a bucket holding more than `maxBucket` members (mass duplicates, or
-    * many near-empty documents sharing a signature) would make the
-    * self-join quadratic in that bucket. Such buckets switch to STAR
+    * many near-empty documents sharing a signature) would make all-pairs
+    * generation quadratic in that bucket. Such buckets switch to STAR
     * compression — every member pairs with the bucket's hub (min doc_id),
     * O(n) edges instead of O(n²) — which preserves connected-components
     * connectivity, so mass-duplicated content still collapses into one
@@ -126,6 +126,19 @@ object Blocking {
     * starred bucket is reduced (only hub pairs are emitted for
     * verification); the switch is observed and logged. Standard buckets
     * are exact.
+    *
+    * Shape: ONE aggregate per `band` — the row count, the hub (min by
+    * doc_id WITH its carry: struct comparison orders by the leading id
+    * field) and a member list bounded at `maxBucket + 1`
+    * ([[graft.functions.BoundedCollect]]: appends stop at the bound, so a
+    * hot bucket costs its partial count and hub, never a buffered member
+    * list). Buckets at or under the cap emit every `a < b` pair straight
+    * from the list ([[graft.functions.BucketPairs]]); no band self-join.
+    * Only over-cap buckets read the band rows a second time, in a
+    * broadcast hub-star join against the (tiny by construction) over-cap
+    * set; when that set is empty at run time, adaptive execution drops the
+    * join and its input. The cap metrics ride the aggregate:
+    * capped_rows = member rows in over-cap buckets.
     *
     * CONTRACT for non-empty `carry` with a carry-determined verify
     * (simhash: hamming over the carried signatures): callers must
@@ -143,12 +156,14 @@ object Blocking {
     * actually produce, so the guard moved to the source.)
     *
     * Input frame: `(doc_id, band, carry...)`; output: distinct `(a_id,
-    * b_id, a_<carry>..., b_<carry>...)` with a_id < b_id.
+    * b_id, a_<carry>..., b_<carry>...)` with a_id < b_id. Nothing is
+    * cached: `bands` is read by the aggregate and, for over-cap buckets
+    * only, by the star join.
     *
     * @param carry    input columns to ride along with each side of a pair
     *                 (e.g. the signature a hamming verify needs) — saves the
-    *                 verify's join-back at the cost of widening the band
-    *                 shuffle rows
+    *                 verify's join-back at the cost of widening the member
+    *                 lists
     * @param preDedup filter applied to the raw (pre-distinct) pair stream.
     *                 Band candidates are mostly false positives, so a cheap
     *                 verify here means the dedup aggregate runs on the few
@@ -158,47 +173,32 @@ object Blocking {
                            carry: Seq[String] = Nil,
                            preDedup: DataFrame => DataFrame = identity): DataFrame = {
     ensureCapListener(bands.sparkSession)
-    // Several consumers read `bands` (bucket stats, the exact path, the
-    // over-cap paths), and upstream of it usually sits an expensive
-    // signature aggregation — persist so that work runs once, not per
-    // branch. Rows are compact (ids + band + carry scalars, ~1% of the
-    // text they derive from). Lifecycle is session-managed like
-    // [[NearDup.pairs]]' hash cache: long-lived sessions should
-    // `spark.catalog.clearCache()` between corpora (this also covers the
-    // derived frames the over-cap branch computes from `b`).
-    val b = bands.persist()
-    // Bucket sizing is a partial+final AGGREGATE, never a window: a window
-    // over `band` would buffer each bucket on one task — the degenerate
-    // hot bucket this cap exists for becoming the straggler — while the
-    // aggregate ships only (band, count, hub) rows. hub = min by doc_id
-    // WITH its carry columns: struct comparison orders by the leading id
-    // field, so the min-aggregate is the hub row itself. The cap metrics
-    // ride this (small) frame: capped_rows = member rows in over-cap
-    // buckets.
+    require(maxBucket >= 1 && maxBucket < Int.MaxValue,
+      s"maxBucket must be in [1, ${Int.MaxValue - 1}], got $maxBucket")
+    val member = struct(col("doc_id") +: carry.map(col): _*)
     val m = Seq(
       sum(when(col("_bsz") > maxBucket, col("_bsz")).otherwise(0L)).as("capped_rows"),
       coalesce(max(col("_bsz")), lit(0L)).as("max_group"))
-    val stats = b.groupBy(col("band")).agg(
+    // hub and members share one struct column: each branch below reads one
+    // of them, and two differently pruned aggregates would shuffle the
+    // band rows twice instead of reusing one exchange
+    val buckets = bands.groupBy(col("band")).agg(
         count(lit(1)).as("_bsz"),
-        min(struct(col("doc_id") +: carry.map(col): _*)).as("_hub"))
+        struct(min(member).as("hub"),
+          BoundedCollect(member, (maxBucket + 1).toInt).as("mem")).as("_b"))
       .observe(BandCapMetric, m.head, m.tail: _*)
-    // over-cap buckets are O(#degenerate templates) — tiny by construction
-    // (that degeneracy is what the cap detects), so BOTH joins against
-    // them resolve as broadcasts under AQE: the exact path's anti-join
-    // passes the band rows through WITHOUT shuffling them for sizing, and
-    // the band shuffle happens exactly once, in the self-join below
-    // (identical subtrees — the exchange is computed once and reused).
-    val big = stats.filter(col("_bsz") > maxBucket)
-    val small = b.join(big.select(col("band")), Seq("band"), "left_anti")
-    val exact = small.as("a").join(small.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id") +: col("b.doc_id").as("b_id") +:
-        (carry.map(c => col(s"a.$c").as(s"a_$c")) ++
-         carry.map(c => col(s"b.$c").as(s"b_$c"))): _*)
-    // star across the over-cap bucket: the hub came free with the stats
-    // aggregate, so this is exactly one (broadcast) join over the member
-    // rows — the shape every mass-duplicate bucket pays
-    val starred = b.join(big.select(col("band"), col("_hub")), Seq("band"))
+    def sides(a: String, b: String) =
+      col(s"$a.doc_id").as("a_id") +: col(s"$b.doc_id").as("b_id") +:
+        (carry.map(c => col(s"$a.$c").as(s"a_$c")) ++
+         carry.map(c => col(s"$b.$c").as(s"b_$c")))
+    val exact = buckets.filter(col("_bsz") > 1 && col("_bsz") <= maxBucket)
+      .select(BucketPairs(col("_b.mem")))
+      .select(sides("a", "b"): _*)
+    // star across each over-cap bucket: the hub came with the aggregate,
+    // so this is one broadcast join over the member rows
+    val big = buckets.filter(col("_bsz") > maxBucket)
+      .select(col("band"), col("_b.hub").as("_hub"))
+    val starred = bands.join(broadcast(big), Seq("band"))
       .filter(col("doc_id") =!= col("_hub.doc_id"))
       .select(col("_hub.doc_id").as("a_id") +: col("doc_id").as("b_id") +:
         (carry.map(c => col(s"_hub.$c").as(s"a_$c")) ++

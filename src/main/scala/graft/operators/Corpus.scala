@@ -714,10 +714,10 @@ object Corpus {
                     bigramMinCount: Long = 2,
                     alpha: Double = 0.4,
                     idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame =
-    bigramLmScoreFrom(docs,
-      bigramLmTrain(docs, vocabSize, bigramMinCount, idCol, textCol),
-      alpha, idCol, textCol)
+                    textCol: String = "text"): DataFrame = {
+    val base = bigramBase(docs, idCol, textCol)
+    bigramScoreOn(base, bigramTrainOn(base, vocabSize, bigramMinCount), alpha)
+  }
 
   /** The trained bigram model as three FRAMES — `(vocab(w, uc),
     * bigrams(prev, w, cb), contexts(prev, cc))` plus the scalar token
@@ -732,10 +732,13 @@ object Corpus {
   def bigramLmTrain(docs: DataFrame, vocabSize: Int = 65536,
                     bigramMinCount: Long = 2,
                     idCol: String = "doc_id",
-                    textCol: String = "text"): BigramLm = {
+                    textCol: String = "text"): BigramLm =
+    bigramTrainOn(bigramBase(docs, idCol, textCol), vocabSize, bigramMinCount)
+
+  private def bigramTrainOn(base: DataFrame, vocabSize: Int,
+                            bigramMinCount: Long): BigramLm = {
     require(vocabSize > 0, "vocabSize must be positive")
     require(bigramMinCount >= 1, "bigramMinCount must be >= 1")
-    val base = bigramBase(docs, idCol, textCol)
     val tok = base.select(col("doc_id"), explode(col("ts")).as("w"))
     val n = tok.count().toDouble
     val vocab = tok.groupBy(col("w")).agg(count(lit(1)).cast("double").as("uc"))
@@ -751,10 +754,13 @@ object Corpus {
   def bigramLmScoreFrom(docs: DataFrame, model: BigramLm,
                         alpha: Double = 0.4,
                         idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame = {
+                        textCol: String = "text"): DataFrame =
+    bigramScoreOn(bigramBase(docs, idCol, textCol), model, alpha)
+
+  private def bigramScoreOn(base: DataFrame, model: BigramLm,
+                            alpha: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, "alpha in (0, 1]")
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-    val base = bigramBase(docs, idCol, textCol)
     val n = lit(model.totalTokens)
     val firstBits = base.filter(size(col("ts")) >= 1)
       .select(col("doc_id"), col("ts").getItem(0).as("w"))
@@ -784,14 +790,15 @@ object Corpus {
           lit(0L)).cast("double") / lit(1e6)).as("bigram_bits_per_token"))
   }
 
-  /** Token-array spine, persisted — train and score of the SAME corpus
-    * share one cache entry (Spark's CacheManager dedupes by canonicalized
-    * plan), so the one-call monolith still tokenizes once. Session-managed
-    * cleanup like the other corpus scorers. */
+  /** Token-array spine, materialized by an eager localCheckpoint: every
+    * branch of train and score reads it, and the one-call monolith hands
+    * the same checkpoint to both, so it tokenizes once. Its blocks are
+    * GC-reclaimed with the frames reading them; no cache entry outlives
+    * the call. */
   private def bigramBase(docs: DataFrame, idCol: String,
                          textCol: String): DataFrame =
     docs.select(col(idCol).as("doc_id"),
-      TF.tokens(col(textCol)).as("ts")).persist()
+      TF.tokens(col(textCol)).as("ts")).localCheckpoint(true)
 
   /** `(doc_id, prev, w)` built INSIDE the token array — per-row transform
     * over `sequence`, no positional self-join. sequence(1, 0) would be

@@ -2,24 +2,44 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => TF, WordNgramHashes}
+import graft.functions.{MinhashSignature, ShingleHashSet, TextFunctions => TF, WordNgramHashes}
 
 /** MinHash-LSH near-duplicate detection as a reusable operator — the
   * library form of the `dd_minhash_lsh` / `dd_dedup_corpus` queries.
   *
   * One-hash construction: each shingle is md5-hashed ONCE; the `slots`
-  * signature positions are linear permutations (a_i·h + b_i) mod P folded
-  * as min-aggregates over exploded (id, shingle-hash) rows — fully
-  * codegen'd hash aggregation with map-side partials. Bands of the
-  * signature bucket candidates ([[Blocking.cappedBandCandidates]] guards
-  * the degenerate buckets), then exact Jaccard over the shingle-hash sets
-  * verifies. Only (id, band) longs shuffle — signatures are
-  * `8·slots` bytes per document regardless of document size, which is what
-  * makes MinHash dedup feasible at 100 TB.
+  * signature positions are linear permutations (a_i·h + b_i) mod P,
+  * minimized over each document's shingle-hash set in one row-wise kernel.
+  * Bands of the signature bucket candidates
+  * ([[Blocking.cappedBandCandidates]] guards the degenerate buckets), then
+  * exact Jaccard over the same shingle-hash sets verifies. Shingle data
+  * shuffles once, as one set per document; candidate generation shuffles
+  * only (band, id) rows — signatures are `8·slots` bytes per document
+  * regardless of document size, which is what makes MinHash dedup
+  * feasible at 100 TB.
   */
 object NearDup {
 
   /** Verified near-dup pairs `(a_id, b_id, jaccard)` with a_id < b_id.
+    *
+    * One pass over the text builds a per-document frame `(doc_id, hs, sig)`:
+    * a narrow projection computes each row's distinct shingle-hash set
+    * ([[graft.functions.ShingleHashSet]]), one `groupBy(doc_id)` merges the
+    * sets of rows sharing an id (their union, as if they were one
+    * document), and the MinHash signature is computed row-wise from the
+    * merged set ([[graft.functions.MinhashSignature]]). Shingle data
+    * shuffles once, as one array per document; no (doc_id, hash) row is
+    * ever exploded. Bands of the signature go through
+    * [[Blocking.cappedBandCandidates]] (one aggregate per bucket) and the
+    * candidates verify by exact Jaccard over the same sets. Documents
+    * shorter than one shingle have an empty set and no signature, so they
+    * never pair.
+    *
+    * The whole result is one lazy plan and nothing is cached: the
+    * per-document frame feeds bands and both verify sides through the
+    * same exchange, which adaptive execution materializes once and
+    * reuses, so repeated calls leave the session's cache as they found
+    * it.
     *
     * @param docs       frame with `idCol` (long) and `textCol` (string)
     * @param ngram      words per shingle
@@ -37,31 +57,25 @@ object NearDup {
     import spark.implicits._
     val perms = (0 until slots).map(TF.minhashPerm)
     val P = TF.MinhashP
-    // the ONLY pass that touches text — tokenize+shingle+hash fused into
-    // one native expression; persisted because three branches consume it
-    // and the cache is hashes only, ~1% of corpus size. Cache lifecycle is
-    // session-managed (LRU-evicted): callers invoking this repeatedly in a
-    // long-lived session should spark.catalog.clearCache() between corpora.
-    val hv = docs
-      .select(col(idCol).as("doc_id"),
-        explode(WordNgramHashes(col(textCol), ngram)).as("h60"))
-      .select($"doc_id", ($"h60" % P).as("h"))
-      .persist()
-    // all slot minima in ONE compact aggregate (MinhashSigAgg): value-
-    // identical to 32 separate min() columns but the plan stays small —
-    // the 32-agg declarative form codegen'd a class whose one-time compile
-    // dominated a cold run
-    val sigArr = hv.groupBy($"doc_id")
-      .agg(graft.functions.MinhashSigAgg($"h", perms, P).as("sig"))
-    val bands = sigArr.select($"doc_id",
+    // a null id never pairs; filtering it here keeps the three consumers'
+    // scans identical (the joins would otherwise infer the filter on two of
+    // them only) so they share one exchange
+    val perDoc = docs
+      .filter(col(idCol).isNotNull)
+      .select(col(idCol).as("doc_id"), ShingleHashSet(col(textCol), ngram, P).as("hs"))
+      .groupBy($"doc_id")
+      .agg(array_distinct(flatten(collect_list($"hs"))).as("hs"))
+      .select($"doc_id", $"hs", MinhashSignature($"hs", perms, P).as("sig"))
+    // an empty set (no signature) never pairs; testing the set, not the
+    // signature, keeps the filter from evaluating the MinHash twice
+    val bands = perDoc.filter(size($"hs") > 0).select($"doc_id",
       explode(TF.minhashBands($"sig", rowsPerBand, slots / rowsPerBand)).as("band"))
     val cand = Blocking.cappedBandCandidates(bands, maxBucket)
     // Jaccard over the shingle-HASH sets — identical values to string
     // jaccard (same md5-derived hashes), far cheaper
-    val sets = hv.groupBy($"doc_id").agg(collect_set($"h").as("hs"))
     cand
-      .join(sets.select($"doc_id".as("a_id"), $"hs".as("sa")), "a_id")
-      .join(sets.select($"doc_id".as("b_id"), $"hs".as("sb")), "b_id")
+      .join(perDoc.select($"doc_id".as("a_id"), $"hs".as("sa")), "a_id")
+      .join(perDoc.select($"doc_id".as("b_id"), $"hs".as("sb")), "b_id")
       .withColumn("jaccard", round(
         size(array_intersect($"sa", $"sb")).cast("double") /
         size(array_union($"sa", $"sb")), 6))
@@ -362,12 +376,12 @@ object NearDup {
     val cliques = (0 until nBands).groupBy(_ % nCliques).values.toSeq
     val pairKeys = cliques.flatMap(c => for { i <- c; j <- c if i < j }
       yield (i, j)).sorted
-    // the signature aggregation is the expensive pass — persisted because
-    // three branches consume it (group stats, the dup-group member frame,
-    // and through them everything downstream). Lifecycle is
-    // session-managed like [[pairs]]' cache: long-lived sessions
-    // clearCache() between corpora.
-    val sigs = simhashSignatures(docs, idCol, textCol, bits).persist()
+    // the signature aggregation is the expensive pass and three branches
+    // consume it (group stats, the dup-group member frame, and through
+    // them everything downstream): eager localCheckpoint, not persist, so
+    // it runs once and its blocks are GC-reclaimed instead of leaving a
+    // cache entry per call (the [[ngramContainmentPairs]] discipline)
+    val sigs = simhashSignatures(docs, idCol, textCol, bits).localCheckpoint(true)
     // group sizing is a partial+final AGGREGATE over the signature (the
     // Blocking doctrine: never a window — the mass group this exists for
     // would become the straggler); the group-cap metric rides it

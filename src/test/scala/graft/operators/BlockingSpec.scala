@@ -1,9 +1,18 @@
 package graft.operators
 
 import graft.TestSpark
-import graft.functions.VectorFunctions
+import graft.functions.{BoundedCollect, VectorFunctions}
+import org.apache.spark.graft.TestBus
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 class BlockingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -68,5 +77,40 @@ class BlockingSpec extends AnyFunSuite {
     val cand = Blocking.cappedBandCandidates(bands, maxBucket = 10)
       .as[(Long, Long)].collect().toSet
     assert(cand == Set((1L, 2L), (1L, 3L), (2L, 3L)))
+  }
+
+  test("an over-cap bucket keeps its exact count and hub; members stay bounded") {
+    // the member list never holds more than its bound, whatever the
+    // update and merge order
+    val agg = BoundedCollect(BoundReference(0, LongType, nullable = false), 4)
+    val a = agg.createAggregationBuffer()
+    (1L to 50L).foreach(i => agg.update(a, InternalRow(i)))
+    assert(a.length == 4)
+    val b = agg.createAggregationBuffer()
+    (51L to 53L).foreach(i => agg.update(b, InternalRow(i)))
+    assert(agg.merge(a, b).length == 4)
+    assert(agg.merge(agg.createAggregationBuffer(), b).length == 3)
+    // a 30-row bucket over maxBucket = 3, spread over four partitions: the
+    // star hangs off the true min id and reaches every member, and the cap
+    // metric reports the full count
+    val metrics = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.observedMetrics.get(Blocking.BandCapMetric).foreach(metrics.add)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val hot = (1L to 30L).map(i => (i + 100L, 7L)) ++ Seq((5L, 8L), (6L, 8L))
+      val cand = Blocking.cappedBandCandidates(
+          hot.toDF("doc_id", "band").repartition(4), maxBucket = 3)
+        .as[(Long, Long)].collect().toSet
+      assert(cand == (102L to 130L).map(i => (101L, i)).toSet + ((5L, 6L)))
+      TestBus.flush(spark.sparkContext)
+      val m = metrics.asScala.toSeq
+      assert(m.nonEmpty, "graft_band_cap metric missing")
+      assert(m.forall(_.getAs[Long]("max_group") == 30L))
+      assert(m.forall(_.getAs[Long]("capped_rows") % 30L == 0L))
+    } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -416,6 +416,15 @@ class CorpusSpec extends AnyFunSuite {
       "scoring against the staged model must be bit-identical to the monolith")
   }
 
+  test("bigram LM train and score leave the cache empty") {
+    spark.catalog.clearCache()
+    val docs = (1L to 12L).map(i => (i, s"alpha tok${i % 5} beta tok${i % 3} gamma"))
+      .toDF("doc_id", "text")
+    Corpus.bigramLmScore(docs, vocabSize = 8).collect()
+    Corpus.bigramLmScoreFrom(docs, Corpus.bigramLmTrain(docs, vocabSize = 8)).collect()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("dedupLines keeps first occurrences in order; unique docs pass through") {
     val docs = Seq(
       (1L, "nav bar\nreal content one\nnav bar\nreal content two\nnav bar"),
